@@ -2,6 +2,8 @@ package graft
 
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -72,15 +74,11 @@ object SparkEntry {
     * scale the scan is already thousands of tasks, and an unconditional
     * repartition would insert a full raw-row shuffle AHEAD of the
     * size-reducing partial aggregates it feeds — guide §2.1's first rule
-    * inverted — so the guard turns it off. The partition probe plans the
-    * (scan-only) input; it runs no job.
+    * inverted — so the guard ([[spreadTarget]]) turns it off.
     */
   private def spreadIfNarrow(
-      df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val target = math.max(2, df.sparkSession.sparkContext.defaultParallelism)
-    if (df.queryExecution.toRdd.getNumPartitions >= target) df
-    else df.repartition(target, key)
-  }
+      df: DataFrame, key: org.apache.spark.sql.Column): DataFrame =
+    spreadTarget(df).fold(df)(df.repartition(_, key))
 
   /** The documents id list REPARTITIONED for fabrication parallelism:
     * the small parquet scans as ONE partition, so every
@@ -98,9 +96,26 @@ object SparkEntry {
   private def docIds(s: SparkSession, dir: String): Dataset[Long] = {
     import s.implicits._
     val ids = t(s, dir, "documents").select(col("doc_id"))
-    val target = math.max(2, s.sparkContext.defaultParallelism)
-    if (ids.queryExecution.toRdd.getNumPartitions >= target) ids.as[Long]
-    else ids.as[Long].repartition(target)
+    spreadTarget(ids).fold(ids.as[Long])(ids.as[Long].repartition(_))
+  }
+
+  /** The session's core count (at least 2) when `df` arrives narrower than
+    * that, else None. The partition count is read off the planned RDD,
+    * which runs no job only while the plan holds no Exchange: under AQE,
+    * `toRdd` first materializes every shuffle and broadcast stage. The
+    * check reads the prepared plan, so it also sees the exchanges that
+    * EnsureRequirements adds for an aggregate or a join, not only an
+    * explicit repartition.
+    */
+  private[graft] def spreadTarget(df: DataFrame): Option[Int] = {
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    require(plan.find(_.isInstanceOf[Exchange]).isEmpty,
+      s"partition probe needs an exchange-free plan, got:\n$plan")
+    val target = math.max(2, df.sparkSession.sparkContext.defaultParallelism)
+    if (df.queryExecution.toRdd.getNumPartitions >= target) None else Some(target)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -441,11 +456,7 @@ object SparkEntry {
       // 16-column ReadSchema and xxhash64 over all of them — the r14
       // profile's 0.87 s single fat task. Only the join key and the
       // aggregated measure survive downstream; the salt stays deterministic
-      // per row and the join/aggregate result is salt-independent. The
-      // guarded spread parallelizes the one-row-group demo scan (no-op at
-      // scale, see spreadIfNarrow) — keyed by the ROW hash, not l_partkey:
-      // hash-partitioning by the join key would re-serialize exactly the
-      // hot key the salt exists to spread.
+      // per row and the join/aggregate result is salt-independent.
       val li = t(s, dir, "lineitem").select(col("l_partkey"), col("l_quantity"))
       val p = t(s, dir, "part")
       graft.operators.SkewTools.saltedJoin(li, p, "l_partkey", "p_partkey", 16)

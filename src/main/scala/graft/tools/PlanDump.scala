@@ -19,8 +19,8 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional session confs, e.g. SPARK_GRAFT_CONF="spark.sql.files.maxPartitionBytes=8192"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
+    sys.env.get("SPARK_GRAFT_CONF").foreach(parseConf(_).foreach { case (k, v) =>
+      spark.conf.set(k, v)
     })
     val tag = args(0)
     val names = args(1).split(",").toSeq
@@ -36,4 +36,16 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** Comma-separated `key=value` session confs; an entry without `=` is
+    * rejected by name.
+    */
+  def parseConf(spec: String): Seq[(String, String)] =
+    spec.split(",").toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
+      }
+    }
 }
