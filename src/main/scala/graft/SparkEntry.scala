@@ -3572,8 +3572,8 @@ object SparkEntry {
     }),
 
     // .tar.xz source archives — the kernel/source-tarball shape: the
-    // from-scratch xz walk (LZMA2 chunks, every container CRC verified,
-    // block check over the UNCOMPRESSED bytes) feeding the tar member
+    // xz decode (LZMA2 chunks, every container CRC verified, block
+    // check over the UNCOMPRESSED bytes) feeding the tar member
     // walk. Check types rotate by archive id (none/crc32/crc64/sha256)
     // and the query REPORTS the check it read off the stream header, so
     // the oracle pins both the listing and the container metadata.
@@ -5076,8 +5076,8 @@ object SparkEntry {
     }),
 
     // WIKI-DUMP mining — the classic public-corpus source in its real
-    // shipping shape: bzip2 export-XML shards (the from-scratch Bzip2
-    // walk, both CRCs verified) → hardened XML parse → per-page
+    // shipping shape: bzip2 export-XML shards (the Bzip2 decode, both
+    // CRCs verified) → hardened XML parse → per-page
     // wikitext cleanup (templates dropped, links unwrapped, refs and
     // comments removed, heading bars stripped). The shard's <siteinfo>
     // namespace map resolves each page's ns id to its NAME (key 0 is
@@ -5253,7 +5253,7 @@ object SparkEntry {
     // charset/boilerplate/PDF work. The corpus exercises the whole
     // routing table — gzip, spec deflate (zlib), the wild-server RAW
     // deflate under the same token (decode retries unwrapped), identity,
-    // bzip2 (the from-scratch walk, both CRCs verified), and an
+    // bzip2 (both CRCs verified), and an
     // unsupported brotli token that DIVERTS with the original
     // bytes kept and the reject named. Decoded text is pinned exactly.
     // Scale shape: per-record scalar decode inside the archive explode's

@@ -1,28 +1,21 @@
 package graft.operators
 
+import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
+
 /** bzip2 — the block-sorting compressor two decades of public corpora
   * ship in (Wikipedia dumps are `.xml.bz2`; old crawls carry
-  * `.tar.bz2`). No JVM decoder exists in this environment, so this is
-  * a from-scratch structural implementation of the PUBLIC format (the
-  * bzip2 1.0 stream layout, as documented by the program and its
-  * format descriptions): stream header `BZh<level>` → blocks
-  * (48-bit magic 314159265359h, block CRC, origPtr, symbol-usage maps,
-  * 2-6 MTF+unary-coded Huffman tables with selectors every 50 symbols,
-  * delta-coded code lengths, then RUNA/RUNB zero-run + MTF symbols) →
-  * inverse BWT from origPtr → final RLE (4 equal bytes + count) — and
-  * the stream footer 177245385090h with the combined CRC.
-  *
-  * Every stage is BOUNDED: block sizes are capped by the declared
-  * level, the caller passes a total output cap, and both CRCs verify —
-  * a crafted stream costs one bounded pass, never a hang or the heap.
-  * The deprecated `randomized` block flag (0.9.0-era) is a named
-  * reject.
+  * `.tar.bz2`). Decoding is commons-compress's
+  * `BZip2CompressorInputStream` (shipped with Spark): both CRCs
+  * verified, legacy randomized blocks decoded as `bzip2 -dc` does. This
+  * object adds the caller's total output cap and names every failure
+  * `bzip2:` (an `IllegalArgumentException`) — a crafted stream costs one
+  * bounded pass, never a hang or the heap.
   *
   * The [[compress]] half exists for deterministic fixtures: a valid,
-  * unsophisticated encoder (single block per ~N bytes, two identical
-  * uniform-length Huffman tables — the format's minimum group count)
-  * whose output any conformant decoder reads back. Compression ratio
-  * is NOT its goal; spec coverage of the reader is.
+  * unsophisticated encoder of the public bzip2 1.0 stream layout
+  * (single block per ~N bytes, two identical uniform-length Huffman
+  * tables — the format's minimum group count) whose output any
+  * conformant decoder reads back. Compression ratio is NOT its goal.
   *
   * Scale shape: per-record scalar decode inside the archive explode,
   * like gzip/zstd.
@@ -63,30 +56,7 @@ object Bzip2 {
     def value: Int = ~v
   }
 
-  // ------------------------------------------------------------- bit I/O
-
-  private final class BitIn(b: Array[Byte]) {
-    var pos = 0L // bit position
-    def bits(n: Int): Int = {
-      var out = 0
-      var i = 0
-      while (i < n) {
-        val byteAt = (pos >>> 3).toInt
-        require(byteAt < b.length, "bzip2: truncated stream")
-        val bit = (b(byteAt) >>> (7 - (pos & 7).toInt)) & 1
-        out = (out << 1) | bit
-        pos += 1
-        i += 1
-      }
-      out
-    }
-    def bitsLong(n: Int): Long = {
-      var out = 0L
-      var i = 0
-      while (i < n) { out = (out << 1) | bits(1); i += 1 }
-      out
-    }
-  }
+  // ---------------------------------------------------------- bit output
 
   private final class BitOut {
     private val buf = new java.io.ByteArrayOutputStream()
@@ -117,21 +87,14 @@ object Bzip2 {
     * byte-aligned concatenations of independent streams, the layout
     * Wikipedia `pages-articles-multistream.xml.bz2` dumps ship in and
     * what canonical `bzip2 -dc` decodes. Each stream's CRC is checked
-    * independently; trailing bytes that are not a `BZh` header are a
-    * named reject. `maxOut` bounds the TOTAL output across all streams
-    * (decompression-bomb guard). Throws named
-    * `IllegalArgumentException`s for anything out of profile.
+    * independently; trailing bytes that are not a stream are a named
+    * reject. `maxOut` bounds the TOTAL output across all streams
+    * (decompression-bomb guard).
     */
   def decompress(b: Array[Byte], maxOut: Int = 256 << 20): Array[Byte] = {
     require(isBzip2(b), "bzip2: missing BZh header")
-    val out = new java.io.ByteArrayOutputStream()
-    var off = 0
-    while (off < b.length) {
-      require(headerAt(b, off),
-        s"bzip2: trailing garbage after stream end (offset $off)")
-      off = decodeStream(b, off, out, maxOut)
-    }
-    out.toByteArray
+    Gunzip.decodeCapped("bzip2", maxOut)(
+      new BZip2CompressorInputStream(new java.io.ByteArrayInputStream(b), true))
   }
 
   /** Decode exactly ONE stream starting at byte `offset` of a
@@ -142,252 +105,12 @@ object Bzip2 {
     */
   def decompressOne(b: Array[Byte], offset: Int,
       maxOut: Int = 256 << 20): (Array[Byte], Int) = {
-    val out = new java.io.ByteArrayOutputStream()
-    val end = decodeStream(b, offset, out, maxOut)
-    (out.toByteArray, end)
+    require(offset >= 0 && offset < b.length, s"bzip2: offset $offset out of range")
+    val in = new java.io.ByteArrayInputStream(b, offset, b.length - offset)
+    val out = Gunzip.decodeCapped("bzip2", maxOut)(new BZip2CompressorInputStream(in, false))
+    (out, b.length - in.available())
   }
 
-  private def headerAt(b: Array[Byte], off: Int): Boolean =
-    off >= 0 && b.length - off >= 4 &&
-      b(off) == 'B' && b(off + 1) == 'Z' && b(off + 2) == 'h' &&
-      b(off + 3) >= '1' && b(off + 3) <= '9'
-
-  /** Decode the single stream at byte `offset` into `out`; returns the
-    * byte offset just past its (byte-padded) footer. `maxOut` caps the
-    * cumulative size of `out`, so multistream callers get a TOTAL cap.
-    */
-  private def decodeStream(b: Array[Byte], offset: Int,
-      out: java.io.ByteArrayOutputStream, maxOut: Int): Int = {
-    require(headerAt(b, offset), s"bzip2: missing BZh header at offset $offset")
-    val blockCap = (b(offset + 3) - '0') * 100000
-    val in = new BitIn(b)
-    in.pos = offset.toLong * 8 + 32 // past BZh<level>
-    var combinedCrc = 0
-    var done = false
-    while (!done) {
-      val magic = in.bitsLong(48)
-      if (magic == 0x177245385090L) {
-        val streamCrc = in.bitsLong(32).toInt
-        require(streamCrc == combinedCrc,
-          f"bzip2: stream CRC mismatch (got ${combinedCrc}%08x, stored ${streamCrc}%08x)")
-        done = true
-      } else {
-        require(magic == 0x314159265359L,
-          f"bzip2: bad block magic ${magic}%012x")
-        val blockCrcStored = in.bitsLong(32).toInt
-        require(in.bits(1) == 0, "bzip2: randomized blocks (0.9.0) unsupported")
-        val origPtr = in.bits(24)
-        // ---- symbol map
-        val used16 = in.bits(16)
-        val inUse = new Array[Boolean](256)
-        var i = 0
-        while (i < 16) {
-          if ((used16 & (0x8000 >>> i)) != 0) {
-            var j = 0
-            while (j < 16) {
-              if (in.bits(1) == 1) inUse(i * 16 + j) = true
-              j += 1
-            }
-          }
-          i += 1
-        }
-        val seqToUnseq = (0 until 256).filter(inUse).toArray
-        require(seqToUnseq.nonEmpty, "bzip2: empty symbol map")
-        val alphaSize = seqToUnseq.length + 2
-        // ---- groups and selectors
-        val nGroups = in.bits(3)
-        require(nGroups >= 2 && nGroups <= 6, s"bzip2: $nGroups groups")
-        val nSelectors = in.bits(15)
-        require(nSelectors >= 1 && nSelectors <= MaxSelectors,
-          s"bzip2: $nSelectors selectors")
-        val selectorMtf = new Array[Int](nSelectors)
-        i = 0
-        while (i < nSelectors) {
-          var j = 0
-          while (in.bits(1) == 1) { j += 1; require(j < nGroups, "bzip2: selector overflow") }
-          selectorMtf(i) = j
-          i += 1
-        }
-        val selectors = new Array[Int](nSelectors)
-        val mtfGroups = Array.tabulate(nGroups)(identity)
-        i = 0
-        while (i < nSelectors) {
-          val j = selectorMtf(i)
-          val v = mtfGroups(j)
-          var k = j
-          while (k > 0) { mtfGroups(k) = mtfGroups(k - 1); k -= 1 }
-          mtfGroups(0) = v
-          selectors(i) = v
-          i += 1
-        }
-        // ---- code lengths (delta-coded), then canonical tables
-        val lengths = Array.ofDim[Int](nGroups, alphaSize)
-        var g = 0
-        while (g < nGroups) {
-          var len = in.bits(5)
-          var s = 0
-          while (s < alphaSize) {
-            var cont = true
-            while (cont) {
-              require(len >= 1 && len <= 23, s"bzip2: code length $len")
-              if (in.bits(1) == 0) cont = false
-              else if (in.bits(1) == 0) len += 1
-              else len -= 1
-            }
-            lengths(g)(s) = len
-            s += 1
-          }
-          g += 1
-        }
-        // canonical decode tables per group: limit/base/perm
-        val limit = Array.ofDim[Int](nGroups, 25)
-        val base = Array.ofDim[Int](nGroups, 25)
-        val perm = Array.ofDim[Int](nGroups, alphaSize)
-        val minLens = new Array[Int](nGroups)
-        g = 0
-        while (g < nGroups) {
-          val ls = lengths(g)
-          val minLen = ls.min
-          val maxLen = ls.max
-          minLens(g) = minLen
-          var pp = 0
-          var l = minLen
-          while (l <= maxLen) {
-            var s = 0
-            while (s < alphaSize) {
-              if (ls(s) == l) { perm(g)(pp) = s; pp += 1 }
-              s += 1
-            }
-            l += 1
-          }
-          val cnt = new Array[Int](25)
-          ls.foreach(l2 => cnt(l2 + 1) += 1)
-          var k = 1
-          while (k < 25) { cnt(k) += cnt(k - 1); k += 1 }
-          var vec = 0
-          l = minLen
-          while (l <= maxLen) {
-            vec += cnt(l + 1) - cnt(l)
-            limit(g)(l) = vec - 1
-            vec <<= 1
-            l += 1
-          }
-          l = minLen + 1
-          while (l <= maxLen) {
-            base(g)(l) = ((limit(g)(l - 1) + 1) << 1) - cnt(l)
-            l += 1
-          }
-          g += 1
-        }
-        // ---- MTF + RLE2 decode into the BWT buffer
-        val bwt = new Array[Byte](blockCap)
-        var nBwt = 0
-        val mtf = seqToUnseq.clone()
-        var groupNo = -1
-        var groupPos = 0
-        def nextSym(): Int = {
-          if (groupPos == 0) {
-            groupNo += 1
-            require(groupNo < nSelectors, "bzip2: ran out of selectors")
-            groupPos = 50
-          }
-          groupPos -= 1
-          val gg = selectors(groupNo)
-          var l = minLens(gg)
-          var v = in.bits(l)
-          while (v > limit(gg)(l)) {
-            l += 1
-            require(l <= 23, "bzip2: corrupt Huffman code")
-            v = (v << 1) | in.bits(1)
-          }
-          perm(gg)(v - base(gg)(l))
-        }
-        val eob = alphaSize - 1
-        var sym = nextSym()
-        while (sym != eob) {
-          if (sym <= 1) {
-            // RUNA/RUNB: bijective base-2 count of the MTF-front byte
-            var run = 0L
-            var bit = 1L
-            while (sym <= 1) {
-              run += (if (sym == 0) bit else 2 * bit)
-              bit <<= 1
-              require(run <= blockCap, "bzip2: zero-run past the block size")
-              sym = nextSym()
-            }
-            val byte = mtf(0)
-            var r = 0L
-            while (r < run) {
-              require(nBwt < blockCap, "bzip2: block overruns its declared size")
-              bwt(nBwt) = byte.toByte; nBwt += 1
-              r += 1
-            }
-          } else {
-            // an MTF hit at position sym-1
-            val idx = sym - 1
-            require(idx < mtf.length, "bzip2: MTF index out of range")
-            val byte = mtf(idx)
-            var k = idx
-            while (k > 0) { mtf(k) = mtf(k - 1); k -= 1 }
-            mtf(0) = byte
-            require(nBwt < blockCap, "bzip2: block overruns its declared size")
-            bwt(nBwt) = byte.toByte; nBwt += 1
-            sym = nextSym()
-          }
-        }
-        require(origPtr >= 0 && origPtr < nBwt, s"bzip2: origPtr $origPtr of $nBwt")
-        // ---- inverse BWT (the standard counting construction)
-        val counts = new Array[Int](256)
-        i = 0
-        while (i < nBwt) { counts(bwt(i) & 0xff) += 1; i += 1 }
-        val starts = new Array[Int](256)
-        var sum = 0
-        i = 0
-        while (i < 256) { starts(i) = sum; sum += counts(i); i += 1 }
-        val next = new Array[Int](nBwt)
-        val fill = starts.clone()
-        i = 0
-        while (i < nBwt) {
-          val c = bwt(i) & 0xff
-          next(fill(c)) = i
-          fill(c) += 1
-          i += 1
-        }
-        // ---- walk + final RLE decode + block CRC
-        val crc = new Crc()
-        var p = next(origPtr)
-        var emitted = 0
-        var runByte = -1
-        var runLen = 0
-        def emit(v: Int): Unit = {
-          require(out.size() < maxOut, "bzip2: output past the cap")
-          out.write(v)
-          crc.update(v.toByte)
-        }
-        while (emitted < nBwt) {
-          val v = bwt(p) & 0xff
-          p = next(p)
-          emitted += 1
-          if (runLen == 4) {
-            // the byte after 4 equal bytes is a repeat count
-            var r = 0
-            while (r < v) { emit(runByte); r += 1 }
-            runLen = 0
-            runByte = -1
-          } else {
-            if (v == runByte) runLen += 1
-            else { runByte = v; runLen = 1 }
-            emit(v)
-          }
-        }
-        require(crc.value == blockCrcStored,
-          f"bzip2: block CRC mismatch (got ${crc.value}%08x, stored ${blockCrcStored}%08x)")
-        combinedCrc = ((combinedCrc << 1) | (combinedCrc >>> 31)) ^ crc.value
-      }
-    }
-    // a stream ends byte-padded; the next (multistream) header is aligned
-    ((in.pos + 7) >>> 3).toInt
-  }
 
   // ------------------------------------------------------------- encoder
 

@@ -1450,7 +1450,7 @@ object Ingest {
   }
 
   /** `.tar.xz` source archives — the kernel/source-tarball corpus
-    * shape: the tar corpus re-wrapped in the from-scratch [[Xz]], check
+    * shape: the tar corpus re-wrapped by the [[Xz]] writer, check
     * type rotating by archive id so none/crc32/crc64/sha256 all ride
     * the contract lane.
     */

@@ -18,8 +18,8 @@ package graft.operators
   *  - **Legacy frame** (magic `02 21 4C 18`, `lz4 -l`): headerless
   *    8 MiB-block stream, terminated by EOF or a next frame magic.
   *
-  * xxHash32 is implemented from its published algorithm (the frame
-  * spec's designated checksum; primes per the reference description).
+  * xxHash32 (the frame spec's designated checksum) is lz4-java's, which
+  * ships with Spark.
   *
   * Every stage is BOUNDED: block sizes are capped by the descriptor's
   * BD code, the caller passes a total output cap, and a crafted stream
@@ -52,45 +52,11 @@ object Lz4 {
 
   // ------------------------------------------------------------- xxHash32
 
-  private final val P1 = 0x9E3779B1
-  private final val P2 = 0x85EBCA77
-  private final val P3 = 0xC2B2AE3D
-  private final val P4 = 0x27D4EB2F
-  private final val P5 = 0x165667B1
+  private val xxHash32 = net.jpountz.xxhash.XXHashFactory.safeInstance().hash32()
 
   /** xxHash32 over `b[from, until)` — the frame format's checksum. */
-  def xxh32(b: Array[Byte], from: Int, until: Int, seed: Int = 0): Int = {
-    val len = until - from
-    var p = from
-    var h: Int =
-      if (len >= 16) {
-        var v1 = seed + P1 + P2
-        var v2 = seed + P2
-        var v3 = seed
-        var v4 = seed - P1
-        val limit = until - 16
-        while (p <= limit) {
-          v1 = Integer.rotateLeft(v1 + leU32(b, p).toInt * P2, 13) * P1
-          v2 = Integer.rotateLeft(v2 + leU32(b, p + 4).toInt * P2, 13) * P1
-          v3 = Integer.rotateLeft(v3 + leU32(b, p + 8).toInt * P2, 13) * P1
-          v4 = Integer.rotateLeft(v4 + leU32(b, p + 12).toInt * P2, 13) * P1
-          p += 16
-        }
-        Integer.rotateLeft(v1, 1) + Integer.rotateLeft(v2, 7) +
-          Integer.rotateLeft(v3, 12) + Integer.rotateLeft(v4, 18)
-      } else seed + P5
-    h += len
-    while (p + 4 <= until) {
-      h = Integer.rotateLeft(h + leU32(b, p).toInt * P3, 17) * P4
-      p += 4
-    }
-    while (p < until) {
-      h = Integer.rotateLeft(h + (b(p) & 0xff) * P5, 11) * P1
-      p += 1
-    }
-    h ^= h >>> 15; h *= P2; h ^= h >>> 13; h *= P3; h ^= h >>> 16
-    h
-  }
+  def xxh32(b: Array[Byte], from: Int, until: Int, seed: Int = 0): Int =
+    xxHash32.hash(b, from, until - from, seed)
 
   // ------------------------------------------------------- block decoder
 

@@ -1,36 +1,30 @@
 package graft.operators
 
-/** xz / LZMA2 decode from scratch — the OTHER compression the big
-  * public corpora ship in (kernel/source tarballs as `.tar.xz`,
-  * Wikimedia mirrors, many dataset mirrors). Public formats:
+/** xz / LZMA — the OTHER compression the big public corpora ship in
+  * (kernel/source tarballs as `.tar.xz`, Wikimedia mirrors, many dataset
+  * mirrors), in three shapes:
   *
-  *  - the .xz container ("The .xz File Format", tukaani.org spec):
-  *    stream header (magic, check-type flags, CRC32), blocks (CRC32'd
-  *    variable-size header with a filter chain — this profile supports
-  *    the one real-world chain, a single LZMA2 filter — compressed
-  *    data, 4-byte alignment padding, then a CRC32 / CRC64 / SHA-256 /
-  *    none check of the UNCOMPRESSED bytes), an index of (unpadded,
-  *    uncompressed) size records cross-checked against the blocks
-  *    actually read, and a footer whose backward-size must point back
-  *    at the index. MULTISTREAM concatenations (with 4-aligned null
-  *    stream padding) decode end-to-end like [[Bzip2]]; trailing
-  *    garbage is a named reject.
-  *  - LZMA2 (chunked LZMA1): control byte per chunk — uncompressed
-  *    chunks (0x01/0x02), LZMA chunks (0x80+) carrying reset bits for
-  *    state / props / dictionary; sizes are explicit so no end marker
-  *    is needed.
-  *  - LZMA1 (Pavlov's public-domain LZMA specification): 11-bit
-  *    adaptive binary range coder, literal coder with (lc, lp) context
-  *    and matched-byte mode, length coders, 6-bit position-slot trees +
-  *    reverse-decoded align bits, 4 rep distances, 12-state machine.
+  *  - the .xz container ("The .xz File Format", tukaani.org spec): CRC'd
+  *    stream header, blocks with an LZMA2 filter chain, a check of the
+  *    UNCOMPRESSED bytes (none / CRC32 / CRC-64 / SHA-256), an index and
+  *    a footer; MULTISTREAM concatenations with 4-aligned null padding;
+  *  - the legacy `.lzma` (LZMA_ALONE) format;
+  *  - the raw LZMA1 / LZMA2 streams 7z folders carry.
   *
-  * Every CRC (header, index, footer, block check) is verified — a
-  * mismatch is a NAMED reject, as are unsupported filter chains,
-  * truncation, size-record drift, and output past the caller's cap.
-  * The writer half emits valid-but-STORED xz (LZMA2 uncompressed
-  * chunks) — deterministic fixtures any xz implementation decodes —
-  * while canonical-tool goldens pin the real LZMA decode path
-  * (`XzSpec`), the same split the bzip2 codec uses.
+  * Decoding is xz-java (`org.tukaani.xz`, shipped with Spark), which
+  * verifies every CRC and check, the index against the blocks read and
+  * the footer's backward pointer. This object adds what the library does
+  * not enforce: the caller's output cap, exhausted input after a `.lzma`
+  * end marker or a raw stream, the declared unpack sizes, and a memory
+  * cap on the dictionary a header declares (xz-java allocates it before
+  * reading any payload). Every failure is an `IllegalArgumentException`
+  * named `xz:`, `lzma:` or `lzma2:`.
+  *
+  * The writers are our own and deterministic: a greedy LZMA1 encoder
+  * (hash-chain matches, rep0 runs, matched-byte literals) behind the xz,
+  * `.lzma` and raw 7z shapes, or stored LZMA2 chunks — fixtures any xz
+  * implementation decodes, while canonical-tool goldens pin the decode
+  * path (`XzSpec`).
   *
   * Scale shape: identical to gzip/zstd/bzip2 — one member per record,
   * bounded per-record decode inside the archive explode, no native
@@ -43,24 +37,11 @@ object Xz {
   def isXz(b: Array[Byte]): Boolean =
     b.length >= 12 && (0 until 6).forall(i => b(i) == Magic(i))
 
-  // ------------------------------------------------------------- CRC64
-
   /** CRC-64/XZ (ECMA-182 polynomial, reflected, init/final ~0). */
-  private val crc64Table: Array[Long] = {
-    val poly = 0xC96C5795D7870F42L
-    Array.tabulate(256) { n =>
-      var c = n.toLong
-      var k = 0
-      while (k < 8) { c = if ((c & 1L) != 0) (c >>> 1) ^ poly else c >>> 1; k += 1 }
-      c
-    }
-  }
-
   private[operators] def crc64(b: Array[Byte], from: Int, until: Int): Long = {
-    var c = ~0L
-    var i = from
-    while (i < until) { c = crc64Table(((c ^ b(i)) & 0xff).toInt) ^ (c >>> 8); i += 1 }
-    ~c
+    val c = new org.tukaani.xz.check.CRC64
+    c.update(b, from, until - from)
+    java.nio.ByteBuffer.wrap(c.finish()).order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong
   }
 
   private def crc32(b: Array[Byte], from: Int, until: Int): Long = {
@@ -69,80 +50,10 @@ object Xz {
     c.getValue
   }
 
-  // ------------------------------------------------------ LZMA1 decoder
-
   private final val ProbInit: Short = 1024 // (1 << 11) / 2
 
-  /** The binary range decoder (LZMA spec): 32-bit range/code, 11-bit
-    * adaptive probabilities, 5-bit adaptation shift.
-    */
-  private final class RangeDec(b: Array[Byte], var pos: Int, val end: Int) {
-    var range: Int = -1 // 0xFFFFFFFF
-    var code: Int = 0
-    require(end - pos >= 5, "xz: LZMA chunk shorter than the range-coder header")
-    require(b(pos) == 0, "xz: LZMA range coder must start with a zero byte")
-    pos += 1
-    (0 until 4).foreach { _ => code = (code << 8) | (b(pos) & 0xff); pos += 1 }
-    def normalize(): Unit =
-      if ((range & 0xFF000000) == 0) {
-        range <<= 8
-        require(pos < end, "xz: LZMA chunk truncated mid-symbol")
-        code = (code << 8) | (b(pos) & 0xff)
-        pos += 1
-      }
-    def decodeBit(probs: Array[Short], i: Int): Int = {
-      val p = probs(i)
-      val bound = (range >>> 11) * p
-      var bit = 0
-      if (java.lang.Integer.compareUnsigned(code, bound) < 0) {
-        probs(i) = (p + ((2048 - p) >>> 5)).toShort
-        range = bound
-      } else {
-        probs(i) = (p - (p >>> 5)).toShort
-        range -= bound
-        code -= bound
-        bit = 1
-      }
-      normalize()
-      bit
-    }
-    def decodeDirect(n: Int): Int = {
-      var res = 0
-      var i = n
-      while (i > 0) {
-        range = range >>> 1
-        code -= range
-        val t = 0 - (code >>> 31)
-        code += range & t
-        normalize()
-        res = (res << 1) + t + 1
-        i -= 1
-      }
-      res
-    }
-    def bitTree(probs: Array[Short], off: Int, nBits: Int): Int = {
-      var m = 1
-      var i = 0
-      while (i < nBits) { m = (m << 1) + decodeBit(probs, off + m); i += 1 }
-      m - (1 << nBits)
-    }
-    def bitTreeReverse(probs: Array[Short], off: Int, nBits: Int): Int = {
-      var m = 1
-      var sym = 0
-      var i = 0
-      while (i < nBits) {
-        val bit = decodeBit(probs, off + m)
-        m = (m << 1) + bit
-        sym |= bit << i
-        i += 1
-      }
-      sym
-    }
-    def finishedProperly: Boolean = code == 0
-  }
-
-  /** LZMA decode state that survives across LZMA2 chunks (until a state
-    * reset): probability models, the 12-state machine, rep distances.
+  /** The encoder's LZMA model, kept across LZMA2 chunks until a state
+    * reset: probability models, the 12-state machine, rep distances.
     */
   private final class LzmaState {
     var lc = 0
@@ -167,14 +78,11 @@ object Xz {
     val len = new Array[Short](2 + 16 * 8 + 16 * 8 + 256)
     val repLen = new Array[Short](2 + 16 * 8 + 16 * 8 + 256)
 
-    def setProps(prop: Int, lzma2: Boolean = true): Unit = {
-      require(prop < 225, s"xz: bad LZMA props byte $prop")
+    def setProps(prop: Int): Unit = {
       lc = prop % 9
       val rest = prop / 9
       lp = rest % 5
       pb = rest / 5
-      // the lc+lp cap is an LZMA2 rule; the legacy ALONE format allows more
-      if (lzma2) require(lc + lp <= 4, s"xz: LZMA2 requires lc+lp<=4 (lc=$lc lp=$lp)")
       lit = new Array[Short](0x300 << (lc + lp))
       resetState()
     }
@@ -196,250 +104,8 @@ object Xz {
     }
   }
 
-  /** Output window: the whole (bounded) output doubles as the LZMA
-    * dictionary. `dictStart` marks the last dictionary reset — matches
-    * must not reach across it.
-    */
-  private final class OutWindow(maxOut: Int) {
-    val buf = new java.io.ByteArrayOutputStream()
-    private var bytes = new Array[Byte](1 << 16)
-    private var n = 0
-    var dictStart = 0
-    def size: Int = n
-    def put(b: Byte): Unit = {
-      require(n < maxOut, "xz: output past the cap")
-      if (n == bytes.length) bytes = java.util.Arrays.copyOf(bytes, bytes.length * 2)
-      bytes(n) = b
-      n += 1
-    }
-    def byteBack(dist: Int): Byte = {
-      require(dist >= 1 && n - dist >= dictStart, s"xz: match distance $dist past the dictionary")
-      bytes(n - dist)
-    }
-    def copyMatch(dist: Int, len: Int): Unit = {
-      var i = 0
-      while (i < len) { put(byteBack(dist)); i += 1 }
-    }
-    /** Internal buffer (valid through `size`) — lets the container walk
-      * checksum block ranges without copying the whole output per block.
-      */
-    def raw: Array[Byte] = bytes
-    def result(): Array[Byte] = java.util.Arrays.copyOf(bytes, n)
-  }
+  // ------------------------------------------------------------- decoders
 
-  private def decodeLen(rc: RangeDec, probs: Array[Short], posState: Int): Int =
-    if (rc.decodeBit(probs, 0) == 0) rc.bitTree(probs, 2 + posState * 8, 3)
-    else if (rc.decodeBit(probs, 1) == 0) 8 + rc.bitTree(probs, 2 + 128 + posState * 8, 3)
-    else 16 + rc.bitTree(probs, 2 + 256, 8)
-
-  /** Decode one LZMA stream: exactly `unpackSize` bytes (an LZMA2
-    * chunk), or until the end marker when `allowEnd` (the legacy ALONE
-    * format, where `unpackSize` may be Long.MaxValue for size-unknown).
-    * Returns the byte offset just past the consumed input.
-    */
-  private def lzmaChunk(b: Array[Byte], from: Int, until: Int,
-      st: LzmaState, out: OutWindow, unpackSize: Long,
-      allowEnd: Boolean = false): Int = {
-    val rc = new RangeDec(b, from, until)
-    val pbMask = (1 << st.pb) - 1
-    val lpMask = (1 << st.lp) - 1
-    var remaining = unpackSize
-    var endHit = false
-    // Some encoders (liblzma's raw/alone paths — e.g. the LZMA1 streams
-    // inside libarchive-built 7z headers) write an explicit end marker
-    // even when the size is recorded externally. A marker-less stream
-    // leaves at most the 5 range-coder flush bytes unread; more than
-    // that after the declared size means a marker follows — decode
-    // EXACTLY one more symbol and require it to be the marker (any data
-    // symbol trips the guards below as a named reject).
-    var markTries = if (allowEnd) 1 else 0
-    def wantMark: Boolean = {
-      val w = remaining == 0 && markTries > 0 && until - rc.pos > 5
-      if (w) markTries -= 1
-      w
-    }
-    while (!endHit && (remaining > 0 || wantMark)) {
-      val total = out.size - out.dictStart
-      val posState = total & pbMask
-      if (rc.decodeBit(st.isMatch, (st.state << 4) + posState) == 0) {
-        // ---- literal
-        val prevByte = if (total == 0) 0 else out.byteBack(1) & 0xff
-        val litState = ((total & lpMask) << st.lc) + (prevByte >>> (8 - st.lc))
-        val off = 0x300 * litState
-        var symbol = 1
-        if (st.state >= 7) {
-          var matchByte = out.byteBack(st.rep0 + 1) & 0xff
-          var break = false
-          while (!break && symbol < 0x100) {
-            val matchBit = (matchByte >> 7) & 1
-            matchByte = (matchByte << 1) & 0xff
-            val bit = rc.decodeBit(st.lit, off + ((1 + matchBit) << 8) + symbol)
-            symbol = (symbol << 1) | bit
-            if (matchBit != bit) break = true
-          }
-        }
-        while (symbol < 0x100) symbol = (symbol << 1) | rc.decodeBit(st.lit, off + symbol)
-        require(remaining > 0, "lzma: literal past the declared size")
-        out.put((symbol & 0xff).toByte)
-        remaining -= 1
-        st.state = if (st.state < 4) 0 else if (st.state < 10) st.state - 3 else st.state - 6
-      } else if (rc.decodeBit(st.isRep, st.state) != 0) {
-        // ---- rep match
-        require(total > 0 || out.size > out.dictStart, "xz: rep match with empty dictionary")
-        if (rc.decodeBit(st.isRepG0, st.state) == 0) {
-          if (rc.decodeBit(st.isRep0Long, (st.state << 4) + posState) == 0) {
-            // short rep: one byte at rep0
-            st.state = if (st.state < 7) 9 else 11
-            require(remaining > 0, "lzma: short rep past the declared size")
-            out.put(out.byteBack(st.rep0 + 1))
-            remaining -= 1
-          } else {
-            val len = 2 + decodeLen(rc, st.repLen, posState)
-            st.state = if (st.state < 7) 8 else 11
-            require(len <= remaining, "xz: LZMA2 chunk overruns its declared size")
-            out.copyMatch(st.rep0 + 1, len)
-            remaining -= len
-          }
-        } else {
-          val dist =
-            if (rc.decodeBit(st.isRepG1, st.state) == 0) st.rep1
-            else {
-              val d = if (rc.decodeBit(st.isRepG2, st.state) == 0) st.rep2
-              else { val t = st.rep3; st.rep3 = st.rep2; t }
-              st.rep2 = st.rep1
-              d
-            }
-          st.rep1 = st.rep0
-          st.rep0 = dist
-          val len = 2 + decodeLen(rc, st.repLen, posState)
-          st.state = if (st.state < 7) 8 else 11
-          require(len <= remaining, "xz: LZMA2 chunk overruns its declared size")
-          out.copyMatch(st.rep0 + 1, len)
-          remaining -= len
-        }
-      } else {
-        // ---- simple match
-        st.rep3 = st.rep2; st.rep2 = st.rep1; st.rep1 = st.rep0
-        val rawLen = decodeLen(rc, st.len, posState)
-        st.state = if (st.state < 7) 7 else 10
-        // distance
-        val lenState = math.min(rawLen, 3)
-        val slot = rc.bitTree(st.posSlot, lenState << 6, 6)
-        val dist =
-          if (slot < 4) slot
-          else {
-            val directBits = (slot >> 1) - 1
-            var d = (2 | (slot & 1)) << directBits
-            if (slot < 14)
-              // spec: PosDecoders + dist - posSlot, indexed from m=1
-              d += rc.bitTreeReverse(st.specPos, d - slot, directBits)
-            else {
-              d += rc.decodeDirect(directBits - 4) << 4
-              d += rc.bitTreeReverse(st.align, 0, 4)
-            }
-            d
-          }
-        if (dist == -1) {
-          require(allowEnd, "xz: LZMA end marker inside a sized LZMA2 chunk")
-          require(unpackSize == Long.MaxValue || remaining == 0,
-            "lzma: end marker before the declared size")
-          require(rc.finishedProperly, "lzma: range coder not finished at the end marker")
-          endHit = true
-        } else {
-        st.rep0 = dist
-        val len = 2 + rawLen
-        require(len <= remaining, "xz: LZMA2 chunk overruns its declared size")
-        out.copyMatch(st.rep0 + 1, len)
-        remaining -= len
-        }
-      }
-    }
-    require(endHit || remaining == 0,
-      "lzma: stream ended before the declared size")
-    if (!allowEnd)
-      require(rc.pos == until, "xz: LZMA chunk did not consume its declared packed size")
-    rc.pos
-  }
-
-  // ------------------------------------------------------ LZMA2 walker
-
-  /** Decode one LZMA2 stream (the payload of an xz block). */
-  private def lzma2(b: Array[Byte], from: Int, until: Int, out: OutWindow): Int = {
-    // every xz block is an independent dictionary: matches and the
-    // position counters must never reach into a previous block's output
-    out.dictStart = out.size
-    val st = new LzmaState
-    var havePropsEver = false
-    // liblzma rejects an LZMA chunk with reset=0 right after an
-    // uncompressed chunk (state continuity was broken) — match it,
-    // rather than silently repairing the state ourselves
-    var needsReset = false
-    var p = from
-    var done = false
-    while (!done) {
-      require(p < until, "xz: LZMA2 stream missing its end marker")
-      val control = b(p) & 0xff
-      p += 1
-      if (control == 0x00) done = true
-      else if (control <= 0x02) {
-        // uncompressed chunk; 0x01 resets the dictionary
-        require(p + 2 <= until, "xz: LZMA2 uncompressed chunk header truncated")
-        val size = (((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)) + 1
-        p += 2
-        require(p + size <= until, "xz: LZMA2 uncompressed chunk truncated")
-        if (control == 0x01) out.dictStart = out.size
-        var i = 0
-        while (i < size) { out.put(b(p + i)); i += 1 }
-        p += size
-        // an uncompressed chunk invalidates LZMA state continuity
-        if (havePropsEver) st.resetState()
-        needsReset = true
-      } else {
-        require(control >= 0x80, f"xz: bad LZMA2 control byte 0x$control%02X")
-        require(p + 4 <= until, "xz: LZMA2 chunk header truncated")
-        val unpack = (((control & 0x1f) << 16) |
-          ((b(p) & 0xff) << 8) | (b(p + 1) & 0xff)) + 1
-        val packed = (((b(p + 2) & 0xff) << 8) | (b(p + 3) & 0xff)) + 1
-        p += 4
-        val reset = (control >> 5) & 0x3
-        require(!needsReset || reset >= 1,
-          "xz: LZMA chunk without state reset after an uncompressed chunk")
-        needsReset = false
-        if (reset >= 2) {
-          require(p < until, "xz: LZMA2 props byte truncated")
-          st.setProps(b(p) & 0xff)
-          p += 1
-          havePropsEver = true
-        } else require(havePropsEver,
-          "xz: LZMA2 chunk reuses props before any were set")
-        if (reset == 3) out.dictStart = out.size
-        if (reset >= 1 && reset < 2) st.resetState()
-        require(p + packed <= until, "xz: LZMA2 chunk truncated")
-        lzmaChunk(b, p, p + packed, st, out, unpack.toLong)
-        p += packed
-      }
-    }
-    p
-  }
-
-  // -------------------------------------------------------- xz container
-
-  private def varint(b: Array[Byte], at: Int, end: Int): (Long, Int) = {
-    var v = 0L
-    var shift = 0
-    var p = at
-    while ({
-      require(p < end && shift < 63, "xz: bad multibyte integer")
-      val x = b(p) & 0xff
-      p += 1
-      v |= (x & 0x7fL) << shift
-      shift += 7
-      (x & 0x80) != 0
-    }) ()
-    (v, p)
-  }
-
-  private final val CheckSizes = Map(0 -> 0, 1 -> 4, 4 -> 8, 10 -> 32)
   private final val CheckNames = Map(0 -> "none", 1 -> "crc32", 4 -> "crc64", 10 -> "sha256")
 
   /** The stream's declared check type, read off the header flags — the
@@ -450,160 +116,83 @@ object Xz {
     CheckNames.getOrElse(b(7) & 0xff, f"0x${b(7) & 0xff}%02X")
   }
 
+  /** The largest dictionary an xz preset declares (`xz -9`), allowed
+    * under any output cap so that no canonical file is refused for it.
+    */
+  private final val PresetDictMax = 64 << 20
+
+  /** xz-java's memory limit (KiB) for a decode capped at `maxOut`: a
+    * dictionary larger than both the cap and [[PresetDictMax]] can only
+    * serve a hostile header, so it costs a named reject, not the
+    * allocation. The 8 MiB covers the decoder state next to the
+    * dictionary (LZMA1 literal tables reach 6 MiB at lc+lp = 12).
+    */
+  private def memLimitKiB(maxOut: Int): Int = (math.max(maxOut, PresetDictMax) >> 10) + 8192
+
   /** Decompress a whole xz payload (multistream supported; total output
-    * capped at `maxOut`). Named rejects for every out-of-profile shape.
+    * capped at `maxOut`; dictionaries capped by [[memLimitKiB]]).
     */
   def decompress(b: Array[Byte], maxOut: Int = 256 << 20): Array[Byte] = {
     require(isXz(b), "xz: missing stream header magic")
-    val out = new OutWindow(maxOut)
-    var p = 0
-    while (p < b.length) {
-      // stream padding between concatenated streams: null bytes, 4-aligned
-      if (b(p) == 0) {
-        val st = p
-        while (p < b.length && b(p) == 0) p += 1
-        require((p - st) % 4 == 0, "xz: stream padding not 4-byte aligned")
-      }
-      if (p < b.length) {
-        require(b.length - p >= 12 && (0 until 6).forall(i => b(p + i) == Magic(i)),
-          s"xz: trailing garbage after stream end (offset $p)")
-        p = decodeStream(b, p, out)
-      }
-    }
-    out.result()
+    Gunzip.decodeCapped("xz", maxOut)(new org.tukaani.xz.XZInputStream(
+      new java.io.ByteArrayInputStream(b), memLimitKiB(maxOut)))
   }
 
-  /** Decode one xz stream starting at `p`; returns the offset past its
-    * footer. Verifies every CRC, the index against the blocks read, and
-    * the footer's backward pointer.
+  /** Decode the legacy LZMA_ALONE (.lzma) format: 1-byte props, LE32
+    * dictionary size, LE64 uncompressed size (-1 = unknown, terminated
+    * by the end marker — what both `xz --format=lzma` and liblzma
+    * one-shot compression emit). The format has no integrity check;
+    * truncation, size drift, an unfinished range coder and bytes after
+    * the stream are still named rejects.
     */
-  private def decodeStream(b: Array[Byte], start: Int, out: OutWindow): Int = {
-    var p = start + 6
-    require(b(p) == 0, "xz: reserved stream-flag byte set")
-    val checkType = b(p + 1) & 0xff
-    require(CheckSizes.contains(checkType), f"xz: unsupported check type 0x$checkType%02X")
-    val flagsCrc = crc32(b, p, p + 2)
-    p += 2
-    require(leU32(b, p) == flagsCrc, "xz: stream header CRC mismatch")
-    p += 4
-    // ---- blocks until the index indicator
-    val records = Seq.newBuilder[(Long, Long)]
-    var nBlocks = 0
-    var indexAt = -1
-    while (indexAt < 0) {
-      require(p < b.length, "xz: truncated before the index")
-      val sizeByte = b(p) & 0xff
-      if (sizeByte == 0) indexAt = p
-      else {
-        val blockStart = p
-        val headerSize = (sizeByte + 1) * 4
-        require(p + headerSize <= b.length, "xz: block header truncated")
-        require(crc32(b, p, p + headerSize - 4) == leU32(b, p + headerSize - 4),
-          "xz: block header CRC mismatch")
-        val flags = b(p + 1) & 0xff
-        require((flags & 0x3c) == 0, "xz: reserved block-flag bits set")
-        val numFilters = (flags & 0x03) + 1
-        var q = p + 2
-        var declaredCompressed = -1L
-        var declaredUncompressed = -1L
-        if ((flags & 0x40) != 0) { val (v, np) = varint(b, q, p + headerSize); declaredCompressed = v; q = np }
-        if ((flags & 0x80) != 0) { val (v, np) = varint(b, q, p + headerSize); declaredUncompressed = v; q = np }
-        require(numFilters == 1, s"xz: $numFilters-filter chains unsupported (LZMA2 only)")
-        val (fid, q2) = varint(b, q, p + headerSize)
-        require(fid == 0x21, f"xz: filter id 0x$fid%02X unsupported (LZMA2 only)")
-        val (propsSize, q3) = varint(b, q2, p + headerSize)
-        require(propsSize == 1, s"xz: LZMA2 props size $propsSize")
-        // the value itself is unused (output is bounded by maxOut), but
-        // >40 is invalid per the .xz spec §5.3.1 — reject like liblzma
-        require((b(q3) & 0xff) <= 40, "xz: bad LZMA2 dictionary-size byte")
-        q = q3 + 1
-        while (q < p + headerSize - 4) {
-          require(b(q) == 0, "xz: nonzero block-header padding")
-          q += 1
-        }
-        p += headerSize
-        // ---- LZMA2 payload
-        val outBefore = out.size
-        val dataEnd = lzma2(b, p, b.length, out)
-        val unpacked = (out.size - outBefore).toLong
-        val compressed = (dataEnd - p).toLong
-        if (declaredCompressed >= 0)
-          require(compressed == declaredCompressed, "xz: compressed-size record drift")
-        if (declaredUncompressed >= 0)
-          require(unpacked == declaredUncompressed, "xz: uncompressed-size record drift")
-        p = dataEnd
-        while ((p - blockStart) % 4 != 0) {
-          require(p < b.length && b(p) == 0, "xz: nonzero block padding")
-          p += 1
-        }
-        // ---- check of the uncompressed bytes
-        val checkSize = CheckSizes(checkType)
-        require(p + checkSize <= b.length, "xz: block check truncated")
-        checkType match {
-          case 0 => ()
-          case 1 =>
-            val c = new java.util.zip.CRC32()
-            c.update(out.raw, outBefore, out.size - outBefore)
-            require(c.getValue == leU32(b, p), "xz: block CRC32 mismatch")
-          case 4 =>
-            val got = crc64(out.raw, outBefore, out.size)
-            require(got == leU64(b, p), "xz: block CRC64 mismatch")
-          case 10 =>
-            val d = java.security.MessageDigest.getInstance("SHA-256")
-            d.update(out.raw, outBefore, out.size - outBefore)
-            require(d.digest().sameElements(
-              java.util.Arrays.copyOfRange(b, p, p + 32)), "xz: block SHA-256 mismatch")
-        }
-        p += checkSize
-        val unpaddedSize = headerSize.toLong + compressed + checkSize
-        records += ((unpaddedSize, unpacked))
-        nBlocks += 1
-        require(nBlocks <= MaxBlocks, "xz: more blocks than the cap")
-      }
-    }
-    // ---- index: must agree with what was just decoded
-    val indexStart = p
-    p += 1
-    val (count, p1) = varint(b, p, b.length)
-    p = p1
-    val recs = records.result()
-    require(count == recs.length, s"xz: index claims $count blocks, read ${recs.length}")
-    recs.foreach { case (unpadded, unpacked) =>
-      val (u1, np1) = varint(b, p, b.length)
-      val (u2, np2) = varint(b, np1, b.length)
-      require(u1 == unpadded && u2 == unpacked, "xz: index record drift")
-      p = np2
-    }
-    while ((p - indexStart) % 4 != 0) {
-      require(p < b.length && b(p) == 0, "xz: nonzero index padding")
-      p += 1
-    }
-    require(p + 4 <= b.length, "xz: index CRC truncated")
-    require(crc32(b, indexStart, p) == leU32(b, p), "xz: index CRC mismatch")
-    p += 4
-    val indexSize = p - indexStart
-    // ---- footer
-    require(p + 12 <= b.length, "xz: stream footer truncated")
-    require(crc32(b, p + 4, p + 10) == leU32(b, p), "xz: stream footer CRC mismatch")
-    val backward = (leU32(b, p + 4) + 1) * 4
-    require(backward == indexSize, "xz: footer backward size does not point at the index")
-    require(b(p + 8) == 0 && (b(p + 9) & 0xff) == checkType,
-      "xz: footer stream flags disagree with the header")
-    require(b(p + 10) == 'Y' && b(p + 11) == 'Z', "xz: bad footer magic")
-    p + 12
+  def decompressLzmaAlone(b: Array[Byte], maxOut: Int = 256 << 20): Array[Byte] = {
+    val in = new java.io.ByteArrayInputStream(b)
+    val out = Gunzip.decodeCapped("lzma", maxOut)(
+      new org.tukaani.xz.LZMAInputStream(in, memLimitKiB(maxOut)))
+    require(in.available() == 0,
+      s"lzma: trailing garbage after stream end (offset ${b.length - in.available()})")
+    out
   }
 
-  final val MaxBlocks = 1 << 20
+  /** Raw LZMA1 stream as 7z folders carry it: the props byte lives in
+    * the coder attributes, the stream is bare and normally has NO end
+    * marker (the container records both sizes). Decodes exactly
+    * `unpackSize` bytes from `b[from, until)`; an end marker at exactly
+    * the declared size is accepted. The dictionary is the declared
+    * size, whatever the coder attributes claim — it never needs more.
+    * The range-coder flush leaves up to 5 unread tail bytes — more is a
+    * named reject.
+    */
+  private[operators] def decodeRawLzma1(b: Array[Byte], from: Int, until: Int,
+      props: Int, unpackSize: Long, maxOut: Int): Array[Byte] = {
+    require(unpackSize >= 0 && unpackSize <= maxOut,
+      s"lzma: declared size $unpackSize past the cap")
+    val in = new java.io.ByteArrayInputStream(b, from, until - from)
+    val out = Gunzip.decodeCapped("lzma", maxOut) {
+      val lz = new org.tukaani.xz.LZMAInputStream(in, unpackSize, props.toByte, unpackSize.toInt)
+      lz.enableRelaxedEndCondition() // liblzma's raw/alone encoders may add the marker
+      lz
+    }
+    require(out.length == unpackSize, "lzma: size drift")
+    require(in.available() <= 5, "lzma: trailing garbage after the declared stream")
+    out
+  }
 
-  private def crc64Range(b: Array[Byte], from: Int, until: Int): Long =
-    crc64(b, from, until)
-
-  private def leU32(b: Array[Byte], at: Int): Long =
-    (b(at) & 0xffL) | ((b(at + 1) & 0xffL) << 8) |
-      ((b(at + 2) & 0xffL) << 16) | ((b(at + 3) & 0xffL) << 24)
-
-  private def leU64(b: Array[Byte], at: Int): Long =
-    leU32(b, at) | (leU32(b, at + 4) << 32)
+  /** Raw LZMA2 chunk stream (7z's LZMA2 coder payload — an xz block
+    * body, 0x00 end marker included), with a dictionary of the declared
+    * unpack size.
+    */
+  private[operators] def decodeRawLzma2(b: Array[Byte], from: Int, until: Int,
+      unpackSize: Long, maxOut: Int): Array[Byte] = {
+    require(unpackSize >= 0 && unpackSize <= maxOut,
+      s"lzma2: declared size $unpackSize past the cap")
+    val in = new java.io.ByteArrayInputStream(b, from, until - from)
+    val out = Gunzip.decodeCapped("lzma2", maxOut)(
+      new org.tukaani.xz.LZMA2InputStream(in, math.max(unpackSize, 4096L).toInt))
+    require(in.available() == 0, "lzma2: trailing garbage after the end marker")
+    require(out.length == unpackSize, "lzma2: size drift")
+    out
+  }
 
   // ------------------------------------------------------ LZMA1 encoder
 
@@ -857,30 +446,7 @@ object Xz {
     b
   }
 
-  // ------------------------------------------------- legacy .lzma (ALONE)
-
-  /** Decode the legacy LZMA_ALONE (.lzma) format: 1-byte props, LE32
-    * dictionary size, LE64 uncompressed size (-1 = unknown, terminated
-    * by the end marker — what both `xz --format=lzma` and liblzma
-    * one-shot compression emit). No integrity check exists in this
-    * format (its successor .xz added them); truncation, trailing bytes,
-    * size drift and an unfinished range coder are still named rejects.
-    */
-  def decompressLzmaAlone(b: Array[Byte], maxOut: Int = 256 << 20): Array[Byte] = {
-    require(b.length >= 18, "lzma: header truncated")
-    val out = new OutWindow(maxOut)
-    val st = new LzmaState
-    st.setProps(b(0) & 0xff, lzma2 = false)
-    var size = 0L
-    (0 until 8).foreach(i => size |= (b(5 + i) & 0xffL) << (8 * i))
-    require(size == -1L || (size >= 0 && size <= maxOut),
-      s"lzma: declared size $size past the cap")
-    val end = lzmaChunk(b, 13, b.length, st, out,
-      if (size == -1L) Long.MaxValue else size, allowEnd = true)
-    require(end == b.length, s"lzma: trailing garbage after stream end (offset $end)")
-    require(size == -1L || out.size == size, "lzma: size drift")
-    out.result()
-  }
+  // ---------------------------------------------- writers: .lzma and raw 7z
 
   /** The ALONE writer: unknown-size header + end marker (the canonical
     * producers' shape), greedy-LZMA compressed.
@@ -896,43 +462,6 @@ object Xz {
     val enc = new LzmaEnc(data)
     out.write(enc.encodeChunk(0, data.length, endMark = true))
     out.toByteArray
-  }
-
-  // ---------------------------------------------- raw streams (7z coders)
-
-  /** Raw LZMA1 stream as 7z folders carry it: the props byte and the
-    * dictionary size live in the coder attributes, the stream is bare
-    * and normally has NO end marker (the container records both sizes).
-    * Decodes exactly `unpackSize` bytes from `b[from, until)`; an end
-    * marker at exactly the declared size is accepted. The range-coder
-    * flush leaves up to 5 unread tail bytes — more is a named reject.
-    */
-  private[operators] def decodeRawLzma1(b: Array[Byte], from: Int, until: Int,
-      props: Int, unpackSize: Long, maxOut: Int): Array[Byte] = {
-    require(unpackSize >= 0 && unpackSize <= maxOut,
-      s"lzma: declared size $unpackSize past the cap")
-    val out = new OutWindow(maxOut)
-    val st = new LzmaState
-    st.setProps(props, lzma2 = false)
-    val end = lzmaChunk(b, from, until, st, out, unpackSize, allowEnd = true)
-    require(out.size == unpackSize, "lzma: size drift")
-    require(end <= until && until - end <= 5,
-      "lzma: trailing garbage after the declared stream")
-    out.result()
-  }
-
-  /** Raw LZMA2 chunk stream (7z's LZMA2 coder payload — the same walk
-    * as an xz block body, 0x00 end marker included).
-    */
-  private[operators] def decodeRawLzma2(b: Array[Byte], from: Int, until: Int,
-      unpackSize: Long, maxOut: Int): Array[Byte] = {
-    require(unpackSize >= 0 && unpackSize <= maxOut,
-      s"lzma2: declared size $unpackSize past the cap")
-    val out = new OutWindow(maxOut)
-    val end = lzma2(b, from, until, out)
-    require(end == until, "lzma2: trailing garbage after the end marker")
-    require(out.size == unpackSize, "lzma2: size drift")
-    out.result()
   }
 
   /** Raw LZMA1 encode (the 7z coder shape): `(propsByte, packed)` with
@@ -1016,6 +545,8 @@ object Xz {
     dictByteFor(math.max(4096, math.min(n, 1 << 26)))
 
   // --------------------------------------------------------------- writer
+
+  private final val CheckSizes = Map(0 -> 0, 1 -> 4, 4 -> 8, 10 -> 32)
 
   /** Deterministic xz writer any xz implementation decodes: one block,
     * a single LZMA2 filter, correct padding, the chosen check, a

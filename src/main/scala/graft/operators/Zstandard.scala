@@ -156,16 +156,8 @@ object Zstandard {
     val zin = new com.github.luben.zstd.ZstdInputStreamNoFinalizer(in)
     try {
       dict.foreach(zin.setDict)
-      val buf = new Array[Byte](64 * 1024)
-      var n = zin.read(buf)
-      while (n >= 0) {
-        if (n > 0) {
-          if (out.size().toLong + n > maxOut) throw new IllegalArgumentException(
-            s"$what: zstd frame decompresses past the $maxOut-byte cap — rejected as a bomb")
-          out.write(buf, 0, n)
-        }
-        n = zin.read(buf)
-      }
+      Gunzip.drainInto(zin, out, maxOut,
+        s"$what: zstd frame decompresses past the $maxOut-byte cap — rejected as a bomb")
     } catch {
       case e: java.io.IOException =>
         throw new IllegalArgumentException(s"$what: corrupt zstd frame (${e.getMessage})")

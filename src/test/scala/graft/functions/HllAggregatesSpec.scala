@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.functions.GraftFunctions._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.io.Source
@@ -209,5 +209,27 @@ class HllAggregatesSpec extends AnyFunSuite {
       .select(GraftFunctions.hll_jaccard_estimate(col("sk_a"), col("sk_b")))
       .collect()(0).getDouble(0)
     assert(math.abs(j0) < 0.05, s"disjoint jaccard estimate $j0 not near 0")
+  }
+
+  test("Spark's own hll_sketch_agg binary fails graft's estimate and union by name") {
+    // hll_sketch_agg, hll_union_agg and hll_union are also Spark built-ins
+    // (DataSketches HLL): on a session without registerAll the SQL names
+    // resolve to Spark's functions, and the sketch they build is a
+    // different binary, which graft's Column functions must refuse
+    val plain = spark.newSession()
+    val builtin = plain.catalog.getFunction("hll_sketch_agg").className
+    assert(builtin.startsWith("org.apache.spark."), builtin)
+    val sk = plain.sql("SELECT hll_sketch_agg(id) AS sk FROM range(1000)")
+    for ((name, use) <- Seq[(String, Column => Column)](
+        "hll_estimate" -> (c => GraftFunctions.hll_estimate(c)),
+        "hll_union_agg" ->
+          (c => GraftFunctions.hll_estimate(GraftFunctions.hll_union_agg(c))))) {
+      val e = intercept[Exception](sk.select(use(col("sk"))).collect())
+      val named = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case iae: IllegalArgumentException => iae }
+      assert(named.isDefined, s"$name: no IllegalArgumentException in $e")
+      // the sketch header's k field: DataSketches bytes decode to no valid k
+      assert(named.get.getMessage.contains("should be in range"), s"$name: ${named.get}")
+    }
   }
 }

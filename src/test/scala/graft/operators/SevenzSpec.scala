@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * framing is pinned two independent ways: a HAND-ASSEMBLED byte-literal
   * archive written directly from 7zFormat.txt (no writer involvement),
   * and writer round-trips across every coder × layout. The compressed
-  * payloads ride the LZMA core that XzSpec interops against the system
-  * `xz` both directions, and the bzip2/deflate coders with their own
-  * canonical gates.
+  * payloads ride the LZMA encoder and decoder that XzSpec interops
+  * against the system `xz` both directions, and the bzip2/deflate
+  * coders with their own canonical gates.
   */
 class SevenzSpec extends AnyFunSuite {
 

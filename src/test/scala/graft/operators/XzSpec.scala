@@ -36,7 +36,7 @@ class XzSpec extends AnyFunSuite {
     // misaligned padding is a named reject
     val bad = a ++ Array.fill(3)(0.toByte) ++ b
     val e = intercept[IllegalArgumentException](Xz.decompress(bad))
-    assert(e.getMessage.contains("padding"))
+    assert(e.getMessage.contains("Garbage after a valid XZ Stream"))
   }
 
   test("writer round-trips every check type and both modes, incl. empty") {
@@ -108,7 +108,7 @@ class XzSpec extends AnyFunSuite {
       val broken = packed.clone()
       broken(30) = (broken(30) ^ 0x10).toByte
       val e = intercept[IllegalArgumentException](Xz.decompress(broken))
-      assert(e.getMessage.contains("mismatch"), chk)
+      assert(e.getMessage.contains("does not match"), chk)
     }
   }
 
@@ -117,11 +117,11 @@ class XzSpec extends AnyFunSuite {
     // stream-header CRC
     val h = packed.clone(); h(8) = (h(8) ^ 1).toByte
     assert(intercept[IllegalArgumentException](Xz.decompress(h))
-      .getMessage.contains("header CRC"))
+      .getMessage.contains("Stream Header is corrupt"))
     // footer magic
     val f = packed.clone(); f(f.length - 1) = 'Q'.toByte
     assert(intercept[IllegalArgumentException](Xz.decompress(f))
-      .getMessage.contains("footer"))
+      .getMessage.contains("Stream Footer is corrupt"))
   }
 
   test("named rejects: magic, truncation, trailing garbage, output cap") {
@@ -130,7 +130,8 @@ class XzSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Xz.decompress(packed.take(40)))
     val e = intercept[IllegalArgumentException](
       Xz.decompress(packed ++ "junk".getBytes))
-    assert(e.getMessage.contains("trailing garbage") || e.getMessage.contains("padding"))
+    // four bytes are too short for a next stream header
+    assert(e.getMessage.contains("unexpected end of input"))
     val e2 = intercept[IllegalArgumentException](Xz.decompress(packed, maxOut = 10))
     assert(e2.getMessage.contains("cap"))
   }
@@ -147,27 +148,82 @@ class XzSpec extends AnyFunSuite {
     val v = c.getValue
     (0 until 4).foreach(i => broken(20 + i) = ((v >>> (8 * i)) & 0xff).toByte)
     val e = intercept[IllegalArgumentException](Xz.decompress(broken))
-    assert(e.getMessage.contains("unsupported"))
+    assert(e.getMessage.contains("Unsupported XZ filter chain"))
+  }
+
+  /** "dict probe" stored, its block header's dictionary byte patched to
+    * `v` and re-CRC'd — the same patch-and-re-CRC shape as the filter-id
+    * test: the dict byte is the props byte at offset 16 of our 12-byte
+    * block header.
+    */
+  private def withDictByte(v: Int): Array[Byte] = {
+    val packed = Xz.compress("dict probe".getBytes, "crc32", "store")
+    val out = packed.clone()
+    out(16) = v.toByte
+    val c = new java.util.zip.CRC32()
+    c.update(out, 12, 8)
+    val crc = c.getValue
+    (0 until 4).foreach(i => out(20 + i) = ((crc >>> (8 * i)) & 0xff).toByte)
+    out
   }
 
   test("LZMA2 dictionary-size byte > 40 rejects by name (spec §5.3.1)") {
-    // same patch-and-re-CRC shape as the filter-id test: dict byte is the
-    // props byte at offset 16 of our 12-byte block header
-    def withDictByte(v: Int): Array[Byte] = {
-      val packed = Xz.compress("dict probe".getBytes, "crc32", "store")
-      val out = packed.clone()
-      out(16) = v.toByte
-      val c = new java.util.zip.CRC32()
-      c.update(out, 12, 8)
-      val crc = c.getValue
-      (0 until 4).foreach(i => out(20 + i) = ((crc >>> (8 * i)) & 0xff).toByte)
-      out
-    }
     val e = intercept[IllegalArgumentException](Xz.decompress(withDictByte(41)))
-    assert(e.getMessage.contains("dictionary-size"))
-    // 40 (the spec maximum, 4 GiB dict) stays decodable — the value is
-    // unused here, only its validity is gated
-    assert(Xz.decompress(withDictByte(40)).sameElements("dict probe".getBytes))
+    assert(e.getMessage.contains("Unsupported LZMA2 properties"))
+    // 38-40 (2-4 GiB, valid per spec) are past the largest dictionary
+    // xz-java can allocate (byte 37, 1.5 GiB): a named reject as well
+    val e40 = intercept[IllegalArgumentException](Xz.decompress(withDictByte(40)))
+    assert(e40.getMessage.contains("Unsupported LZMA2 properties"))
+  }
+
+  /** Runs `body` and returns what it threw, asserting that this thread
+    * allocated less than 64 MiB meanwhile — a dictionary the header
+    * merely declares must not be allocated.
+    */
+  private def rejectedCheaply(body: => Any): IllegalArgumentException = {
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread.getId
+    val before = threads.getThreadAllocatedBytes(tid)
+    val e = intercept[IllegalArgumentException](body)
+    val allocated = threads.getThreadAllocatedBytes(tid) - before
+    assert(allocated < (64L << 20), s"allocated $allocated bytes")
+    e
+  }
+
+  test("hostile dictionaries: a declared 1 GiB dictionary is a named reject, not an allocation") {
+    // .xz: block header dictionary byte 36 (1 GiB) over a 10-byte payload;
+    // the default 256 MiB output cap bounds the memory xz-java may take
+    val xz = rejectedCheaply(Xz.decompress(withDictByte(36)))
+    assert(xz.getMessage.startsWith("xz:") && xz.getMessage.contains("memory"), xz.getMessage)
+    // 7z: an LZMA1 coder whose props declare a 1 GiB dictionary over a
+    // garbage payload; the raw coder's dictionary is the declared unpack size
+    val data = ("seven zip payload " * 40).getBytes(StandardCharsets.UTF_8)
+    val archive = Sevenz.write(Seq("a.txt" -> data), coder = "lzma")
+    def u32le(b: Array[Byte], at: Int, v: Long): Unit =
+      (0 until 4).foreach(i => b(at + i) = ((v >>> (8 * i)) & 0xff).toByte)
+    def crc(b: Array[Byte], from: Int, until: Int): Long = {
+      val c = new java.util.zip.CRC32(); c.update(b, from, until - from); c.getValue
+    }
+    val hostile = archive.clone()
+    // coder record: flags 0x23 (3-byte id + props), id 03 01 01, 5 props
+    // bytes (props byte, LE32 dictionary); then re-CRC the next header
+    // and the start header that covers its CRC
+    val nextHeader = 32 + (0 until 8).map(i => (archive(12 + i) & 0xffL) << (8 * i)).sum.toInt
+    val coderAt = archive.indexOfSlice(Seq[Byte](0x23, 3, 1, 1, 5), nextHeader)
+    assert(coderAt > 0, "LZMA1 coder record not found")
+    u32le(hostile, coderAt + 6, 1L << 30)
+    u32le(hostile, 28, crc(hostile, nextHeader, hostile.length))
+    u32le(hostile, 8, crc(hostile, 12, 32))
+    // the props alone change nothing: the payload still decodes exactly
+    assert(Sevenz.readEntries(hostile).head.payload.sameElements(data))
+    val rnd = new java.util.Random(10)
+    val garbage = new Array[Byte](10)
+    rnd.nextBytes(garbage)
+    garbage(0) = 0 // past the range coder's leading zero byte
+    System.arraycopy(garbage, 0, hostile, 32, garbage.length)
+    val sz = rejectedCheaply(Sevenz.readEntries(hostile))
+    assert(sz.getMessage.startsWith("lzma:") || sz.getMessage.startsWith("7z:"), sz.getMessage)
   }
 
   test("LZMA chunk without a state reset after an uncompressed chunk " +
@@ -182,13 +238,13 @@ class XzSpec extends AnyFunSuite {
     val broken = packed.take(insertAt) ++
       Array[Byte](0x80.toByte, 0, 0, 0, 0) ++ packed.drop(insertAt)
     val e = intercept[IllegalArgumentException](Xz.decompress(broken))
-    assert(e.getMessage.contains("without state reset"))
+    assert(e.getMessage.contains("Compressed data is corrupt"))
   }
 
   test("fuzz: mutations reject BY NAME or decode to the exact original") {
-    // the committed slice of the 16k-case dev sweep (graft.XzFuzzDev):
-    // single-byte mutations, truncations, and magic-prefixed garbage
-    // must throw IllegalArgumentException (named) or — when the mutated
+    // a seeded slice of a 16k-case sweep: single-byte mutations,
+    // truncations, and magic-prefixed garbage must throw
+    // IllegalArgumentException (named) or — when the mutated
     // byte is semantically dead — decode to the ORIGINAL payload. Any
     // other exception is an unguarded read; any other output is a
     // silently-wrong acceptance.
