@@ -1,5 +1,6 @@
 package graft.functions
 
+import com.fasterxml.jackson.core.io.NumberOutput
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -20,9 +21,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (correctly rounded); Java 17's historical algorithm occasionally emits
   *    a different digit string (e.g. subnormals).
   *
-  * Digits are found exactly as CPython does: the smallest precision p in
-  * [1, 17] whose correctly-rounded p-digit scientific form parses back to
-  * the original bits, then formatted with Python's placement rules.
+  * Digits come from Schubfach (Giulietti 2020, the algorithm of JDK 19's
+  * `Double.toString`) as shipped in jackson-core's `NumberOutput`: the
+  * shortest decimal that round-trips, nearest to the exact binary value.
+  * Java's spec differs from CPython's in one rule, added here: where a
+  * 1-digit decimal round-trips, Java still picks the nearest of the 1- and
+  * 2-digit ones (`4.9E-324`), CPython the nearest 1-digit one (`5e-324`);
+  * only small subnormals are affected. The digits are then placed with
+  * Python's rules.
   */
 object PythonStr {
 
@@ -34,23 +40,36 @@ object PythonStr {
     if (v == 0.0) return if (1.0 / v < 0) "-0.0" else "0.0"
     val neg = v < 0
     val a = math.abs(v)
-    // shortest correctly-rounded digit string via round-trip probing
-    var digits: String = null
-    var exp = 0
-    var p = 1
-    while (digits == null && p <= 17) {
-      val s = String.format("%." + (p - 1) + "e", Double.box(a))
-      if (java.lang.Double.parseDouble(s) == a) {
-        val ei = s.indexOf('e')
-        exp = Integer.parseInt(s.substring(ei + 1))
-        digits = s.substring(0, ei).replace(".", "")
-        // trailing zeros from the fixed-precision format are not part of
-        // the shortest form ("1.500e+00" -> "15")
-        var end = digits.length
-        while (end > 1 && digits.charAt(end - 1) == '0') end -= 1
-        digits = digits.substring(0, end)
+    // shortest digits in Java's spelling: "123.45", "0.00123", "1.2345E-5"
+    // (`true` selects jackson's Schubfach writer over JDK 17's toString)
+    val s = NumberOutput.toString(a, true)
+    val ei = s.indexOf('E')
+    val mantEnd = if (ei < 0) s.length else ei
+    val sig = new java.lang.StringBuilder(17)
+    var lead = 0 // zeros ahead of the first significant digit
+    var j = 0
+    while (j < mantEnd) {
+      val c = s.charAt(j)
+      if (c != '.') { if (c == '0' && sig.length == 0) lead += 1 else sig.append(c) }
+      j += 1
+    }
+    var end = sig.length
+    while (end > 1 && sig.charAt(end - 1) == '0') end -= 1
+    sig.setLength(end)
+    // decimal exponent of the first significant digit
+    var exp = s.indexOf('.') - 1 - lead +
+      (if (ei < 0) 0 else Integer.parseInt(s, ei + 1, s.length, 10))
+    var digits = sig.toString
+    if (end == 2 && a < java.lang.Double.MIN_NORMAL) {
+      // CPython's 1-digit rule: Java chose the nearest 1- or 2-digit decimal,
+      // CPython the nearest 1-digit one if it round-trips. A normal double's
+      // rounding interval is too narrow to hold both kinds; a subnormal's is
+      // symmetric, so only the nearest 1-digit decimal can round-trip alone.
+      val one = new java.math.BigDecimal(a).round(new java.math.MathContext(1))
+      if (java.lang.Double.parseDouble(one.toString) == a) {
+        digits = one.unscaledValue.toString
+        exp = -one.scale
       }
-      p += 1
     }
     val sb = new java.lang.StringBuilder(32)
     if (neg) sb.append('-')

@@ -46,24 +46,34 @@ class HllAggregatesSpec extends AnyFunSuite {
 
   test("double input hashes like Python str(float): matches executed-reference golden") {
     import spark.implicits._
-    // same fixture as tools/gen_goldens.py float section; the aggregate's
-    // PyStrCoerce must render Python str() forms (1e+16, 9.999e-05, ...)
-    // before hashing — Spark's CAST AS STRING would diverge on 7 of these
+    // tools/gen_goldens.py's float section plus the doubles a Formatter-based
+    // renderer spelled wrongly; the aggregate's PyStrCoerce must hash the
+    // CPython str() forms (1e+16, 9.999e-05, ...) of the corpus, register for
+    // register — Spark's CAST AS STRING would diverge on 7 of the fixture
     val fixture = Seq(
       0.1, 1.5, 400.2024, 654941.845, 12345678.0, 1e16, 1.5e16,
       1e-4, 9.999e-5, 5e-324, 1.7976931348623157e308, -0.0, 2.0,
       -273.15, 6.02214076e23, 3.141592653589793, 1e15, 123456789.123)
-    val est = spark.createDataset(fixture).toDF("v").repartition(3)
-      .agg(hll_cardinality(col("v"), 1 << 12)).collect()(0).getDouble(0)
-    val h = graft.hll.HllSketch.empty(1 << 12, 64)
-    fixture.foreach(d => h.update(graft.functions.PythonStr.render(d)))
-    assert(est == h.cardinality)
-    // float column takes the same path through the double renderer
-    val estF = spark.createDataset(fixture.map(_.toFloat)).toDF("v")
-      .agg(hll_cardinality(col("v"), 1 << 12)).collect()(0).getDouble(0)
-    val hf = graft.hll.HllSketch.empty(1 << 12, 64)
-    fixture.map(_.toFloat.toDouble).foreach(d => hf.update(graft.functions.PythonStr.render(d)))
-    assert(estF == hf.cardinality)
+    def viaPython(ds: Seq[Double]): graft.hll.HllSketch = {
+      val h = graft.hll.HllSketch.empty(1 << 12, 64)
+      ds.foreach(d => h.update(PythonStrCorpus.pyStr(java.lang.Double.doubleToRawLongBits(d))))
+      h
+    }
+    def viaSpark(df: org.apache.spark.sql.DataFrame): (graft.hll.HllSketch, Double) = {
+      val row = df.repartition(3).agg(GraftFunctions.hll_sketch_agg(col("v"), 1 << 12),
+        hll_cardinality(col("v"), 1 << 12)).collect()(0)
+      (graft.hll.HllSketch.deserialize(row.getAs[Array[Byte]](0)), row.getDouble(1))
+    }
+    val values = PythonStrCorpus.formatterMisses ++ fixture
+    val want = viaPython(values)
+    val (sk, est) = viaSpark(spark.createDataset(values).toDF("v"))
+    assert(sk.registers.sameElements(want.registers))
+    assert(est == want.cardinality)
+    // a FLOAT column widens first: its Python strings are the widened doubles'
+    val wantF = viaPython(fixture.map(_.toFloat.toDouble))
+    val (skF, estF) = viaSpark(spark.createDataset(fixture.map(_.toFloat)).toDF("v"))
+    assert(skF.registers.sameElements(wantF.registers))
+    assert(estF == wantF.cardinality)
   }
 
   test("long input hashes like Python str(int): numeric vs string columns agree") {
