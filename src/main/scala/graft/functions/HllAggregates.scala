@@ -4,10 +4,11 @@ import graft.hll.HllSketch
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, BinaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, BinaryExpression, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.{UnaryLike, BinaryLike}
+import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -116,6 +117,73 @@ case class HllSketchAgg(
   override def withNewInputAggBufferOffset(o: Int): HllSketchAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): HllSketchAgg = copy(child = c)
   override def prettyName: String = "hll_sketch_agg"
+}
+
+/** `hll_cardinality_fast(col, k)` -> BIGINT: Spark's own HLL++ (Heule et
+  * al.: xxHash64 with seed 42, its bias tables and estimator, through the
+  * public `HyperLogLogPlusPlusHelper`), so the estimate is bit-identical to
+  * `approx_count_distinct(col, rsd)`. The registers live in one object
+  * buffer, an `UnsafeRow` of `numWords` longs over a `byte[]` that crosses
+  * the exchange as is: one aggregate-buffer column per register word (820
+  * at p = 13, as the builtin has) would make every task generate a
+  * projection over all of them. Nulls are skipped; empty input gives 0.
+  */
+case class HllCardinalityFast(
+    child: Expression,
+    rsd: Double,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[UnsafeRow]
+  with UnaryLike[Expression] {
+
+  @transient private lazy val helper = new HyperLogLogPlusPlusHelper(rsd)
+  @transient private lazy val bufferBytes =
+    UnsafeRow.calculateBitSetWidthInBytes(helper.numWords) + 8 * helper.numWords
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    try {
+      helper
+      TypeCheckResult.TypeCheckSuccess
+    } catch {
+      case e: IllegalArgumentException => TypeCheckResult.TypeCheckFailure(e.getMessage)
+    }
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def defaultResult: Option[Literal] = Some(Literal.create(0L, LongType))
+
+  override def createAggregationBuffer(): UnsafeRow = pointTo(new Array[Byte](bufferBytes))
+
+  private def pointTo(bytes: Array[Byte]): UnsafeRow = {
+    val row = new UnsafeRow(helper.numWords)
+    row.pointTo(bytes, bytes.length)
+    row
+  }
+
+  override def update(buffer: UnsafeRow, input: InternalRow): UnsafeRow = {
+    val v = child.eval(input)
+    if (v != null) helper.update(buffer, 0, v, child.dataType)
+    buffer
+  }
+
+  override def merge(b1: UnsafeRow, b2: UnsafeRow): UnsafeRow = {
+    helper.merge(b1, b2, 0, 0)
+    b1
+  }
+
+  override def eval(buffer: UnsafeRow): Any = helper.query(buffer, 0)
+
+  override def serialize(buffer: UnsafeRow): Array[Byte] = buffer.getBytes
+
+  override def deserialize(bytes: Array[Byte]): UnsafeRow = {
+    require(bytes.length == bufferBytes,
+      s"$prettyName buffer of ${bytes.length} bytes, want $bufferBytes")
+    pointTo(bytes)
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): HllCardinalityFast = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): HllCardinalityFast = copy(inputAggBufferOffset = o)
+  override protected def withNewChildInternal(c: Expression): HllCardinalityFast = copy(child = c)
+  override def prettyName: String = "hll_cardinality_fast"
 }
 
 /** Mutable union buffer: starts empty (sketch=null) and adopts the first

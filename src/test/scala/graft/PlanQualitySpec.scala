@@ -107,6 +107,19 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!p.contains("l_extendedprice"), "column pruning lost on lineitem")
   }
 
+  test("hll_cardinality_fast plans as partial/final ObjectHashAggregate, no per-register columns") {
+    import org.apache.spark.sql.functions.col
+    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val p = li.groupBy(col("l_returnflag"))
+      .agg(functions.GraftFunctions.hll_cardinality_fast(col("l_partkey")))
+      .queryExecution.executedPlan.toString
+    val objAggs = "ObjectHashAggregate".r.findAllIn(p).length
+    assert(objAggs >= 2, s"expected partial+final ObjectHashAggregate:\n$p")
+    assert(p.contains("hll_cardinality_fast"), s"fast aggregate missing from plan:\n$p")
+    // the builtin HLL++ carries one MS[i] buffer column per register word
+    assert(!p.contains("MS["), s"per-register buffer columns in plan:\n$p")
+  }
+
   test("word top-k: map-side combine before the exchange, TakeOrdered final") {
     val p = plan("tx_word_topk")
     // partial+final hash aggregation: the exploded token stream collapses
