@@ -1653,7 +1653,7 @@ object SparkEntry {
           (col("_f99") >= 0.98 && col("_f99") <= 1.0).as("p99_ok"))
     }),
 
-    // Stored-sketch quantiles (GkSketchAgg/GkUnionAgg): per-returnflag GK
+    // Stored-sketch quantiles (gk_sketch_agg/gk_union_agg): per-returnflag GK
     // summaries merged to a global one, then point-queried — the sketch-
     // warehouse path where percentiles come from stored state, not rescans.
     // Merge order varies run to run, so (like q_approx_percentiles) the

@@ -4,8 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -123,7 +121,7 @@ case class CmsSketchAgg(
     width: Int = 2048,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CmsSketch] with UnaryLike[Expression] {
+  extends SketchBuildAgg[CmsSketch] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != StringType)
@@ -136,90 +134,15 @@ case class CmsSketchAgg(
     else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
+  override protected def codec: SketchCodec[CmsSketch] = SketchFamily.cms
   override def createAggregationBuffer(): CmsSketch = new CmsSketch(depth, width)
-
-  override def update(buffer: CmsSketch, input: InternalRow): CmsSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[UTF8String].toString)
-    buffer
-  }
-
-  override def merge(b1: CmsSketch, b2: CmsSketch): CmsSketch = b1.merge(b2)
+  override protected def add(buffer: CmsSketch, v: Any): Unit =
+    buffer.add(v.asInstanceOf[UTF8String].toString)
   override def eval(buffer: CmsSketch): Any = buffer.serialize()
-  override def serialize(buffer: CmsSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): CmsSketch = CmsSketch.deserialize(bytes)
   override def withNewMutableAggBufferOffset(o: Int): CmsSketchAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): CmsSketchAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): CmsSketchAgg = copy(child = c)
   override def prettyName: String = "cms_sketch_agg"
-}
-
-/** Union-aggregate buffer: parameters come from the FIRST stored sketch
-  * merged in (an all-null group stays empty and evals to zero-length
-  * bytes — the same empty-sketch convention as the KMV family).
-  */
-final class CmsUnionBuffer extends Serializable {
-  var sk: CmsSketch = null
-  def fold(other: CmsSketch): Unit =
-    if (sk == null) sk = other else sk.merge(other)
-  def serialize(): Array[Byte] =
-    if (sk == null) Array.emptyByteArray else sk.serialize()
-}
-
-/** `cms_union_agg(sketchCol)` -> BinaryType: merge stored CMS sketches —
-  * the warehouse rollup (per-(day, group) frequency sketches re-aggregate
-  * to any coarser grain by element-wise counter addition). Mixed
-  * (depth, width) inputs are an error, not a silent mis-merge.
-  *
-  * Sizing: pick `width` for the MERGED key population, not the per-group
-  * one — a union over g groups carries all their keys, and point lookups
-  * stay collision-free only while width comfortably exceeds that total
-  * (the overcount bound degrades gracefully to 2·N_total/width otherwise,
-  * never undercounts).
-  */
-case class CmsUnionAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[CmsUnionBuffer] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires BINARY sketch input, got ${child.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): CmsUnionBuffer = new CmsUnionBuffer
-
-  override def update(buffer: CmsUnionBuffer, input: InternalRow): CmsUnionBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      val bytes = v.asInstanceOf[Array[Byte]]
-      if (bytes.nonEmpty) buffer.fold(CmsSketch.deserialize(bytes))
-    }
-    buffer
-  }
-
-  override def merge(b1: CmsUnionBuffer, b2: CmsUnionBuffer): CmsUnionBuffer = {
-    if (b2.sk != null) b1.fold(b2.sk)
-    b1
-  }
-
-  override def eval(buffer: CmsUnionBuffer): Any = buffer.serialize()
-  override def serialize(buffer: CmsUnionBuffer): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): CmsUnionBuffer = {
-    val b = new CmsUnionBuffer
-    if (bytes.nonEmpty) b.sk = CmsSketch.deserialize(bytes)
-    b
-  }
-  override def withNewMutableAggBufferOffset(o: Int): CmsUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CmsUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): CmsUnionAgg = copy(child = c)
-  override def prettyName: String = "cms_union_agg"
 }
 
 /** `cms_query(sketch, item)` -> LongType frequency estimate (never an
@@ -239,10 +162,8 @@ case class CmsQuery(left: Expression, right: Expression)
   override def dataType: DataType = LongType
 
   override protected def nullSafeEval(sk: Any, item: Any): Any = {
-    val bytes = sk.asInstanceOf[Array[Byte]]
-    if (bytes.isEmpty) 0L
-    else CmsSketch.deserialize(bytes)
-      .query(item.asInstanceOf[UTF8String].toString)
+    val s = SketchFamily.cms.read(sk.asInstanceOf[Array[Byte]])
+    if (s == null) 0L else s.query(item.asInstanceOf[UTF8String].toString)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsQuery =
@@ -286,20 +207,16 @@ object CmsWire {
   * export is deterministic. See [[CmsWire]].
   */
 case class CmsExport(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with CodegenFallback {
+  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with CodegenFallback
+  with BinarySketchInput {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BINARY sketch input, got ${child.dataType.sql}")
   override def dataType: DataType = CmsWire.wireType
 
   override def nullSafeEval(v: Any): Any = {
-    val bytes = v.asInstanceOf[Array[Byte]]
-    if (bytes.isEmpty) // empty union output -> (0, 0, 0, []) wire
+    val s = SketchFamily.cms.read(v.asInstanceOf[Array[Byte]])
+    if (s == null) // empty set -> (0, 0, 0, []) wire
       return InternalRow(0, 0, 0L,
         new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any]))
-    val s = CmsSketch.deserialize(bytes)
     val cells = scala.collection.mutable.ArrayBuffer.empty[Any]
     var i = 0
     while (i < s.counts.length) {

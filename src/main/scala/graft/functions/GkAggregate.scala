@@ -4,8 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.QuantileSummaries
 import org.apache.spark.sql.catalyst.util.QuantileSummaries.Stats
 import org.apache.spark.sql.types._
@@ -15,7 +13,7 @@ import org.apache.spark.sql.types._
   * Misra-Gries = heavy hitters, Count-Min = frequencies, GK = quantiles).
   * `approx_percentile` answers one query inline; storing the summary
   * instead lets a per-(day, group) sketch table answer ANY later percentile
-  * at ANY rollup via [[GkUnionAgg]] without rescanning raw data.
+  * at ANY rollup via `gk_union_agg` without rescanning raw data.
   *
   * Wraps Spark's own `QuantileSummaries` (the engine under
   * `approx_percentile`): rank error <= relativeError × n, state
@@ -104,7 +102,7 @@ case class GkSketchAgg(
     relativeError: Double = 0.01,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[GkBuffer] with UnaryLike[Expression] {
+  extends SketchBuildAgg[GkBuffer] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != DoubleType)
@@ -114,60 +112,14 @@ case class GkSketchAgg(
     else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
+  override protected def codec: SketchCodec[GkBuffer] = SketchFamily.gk
   override def createAggregationBuffer(): GkBuffer = new GkBuffer(relativeError)
-
-  override def update(buffer: GkBuffer, input: InternalRow): GkBuffer = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[Double])
-    buffer
-  }
-
-  override def merge(b1: GkBuffer, b2: GkBuffer): GkBuffer = b1.merge(b2)
+  override protected def add(buffer: GkBuffer, v: Any): Unit = buffer.add(v.asInstanceOf[Double])
   override def eval(buffer: GkBuffer): Any = buffer.serialize()
-  override def serialize(buffer: GkBuffer): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): GkBuffer = GkBuffer.deserialize(bytes)
   override def withNewMutableAggBufferOffset(o: Int): GkSketchAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): GkSketchAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): GkSketchAgg = copy(child = c)
   override def prettyName: String = "gk_sketch_agg"
-}
-
-/** `gk_union_agg(sketchCol)` -> BinaryType: merge stored GK summaries —
-  * per-(day, group) sketches roll up to any coarser grain losslessly.
-  */
-case class GkUnionAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[GkBuffer] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires BINARY sketch input, got ${child.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): GkBuffer =
-    new GkBuffer(QuantileSummaries.defaultRelativeError)
-
-  override def update(buffer: GkBuffer, input: InternalRow): GkBuffer = {
-    val v = child.eval(input)
-    if (v != null) buffer.merge(GkBuffer.deserialize(v.asInstanceOf[Array[Byte]]))
-    else buffer
-  }
-
-  override def merge(b1: GkBuffer, b2: GkBuffer): GkBuffer = b1.merge(b2)
-  override def eval(buffer: GkBuffer): Any = buffer.serialize()
-  override def serialize(buffer: GkBuffer): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): GkBuffer = GkBuffer.deserialize(bytes)
-  override def withNewMutableAggBufferOffset(o: Int): GkUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): GkUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): GkUnionAgg = copy(child = c)
-  override def prettyName: String = "gk_union_agg"
 }
 
 /** `gk_quantile(sketch, q)` -> DoubleType approximate quantile (null for an
@@ -237,12 +189,9 @@ object GkWire {
   * value order; import(export(s)) serializes byte-identically.
   */
 case class GkExport(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with CodegenFallback {
+  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with CodegenFallback
+  with BinarySketchInput {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BINARY sketch input, got ${child.dataType.sql}")
   override def dataType: DataType = GkWire.wireType
 
   override def nullSafeEval(v: Any): Any = {

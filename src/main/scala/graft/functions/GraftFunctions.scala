@@ -49,7 +49,7 @@ object GraftFunctions {
 
   /** Merge a column of stored sketches into one sketch. */
   def hll_union_agg(col: Column): Column =
-    aggCol(HllUnionAgg(e(col)))
+    aggCol(SketchUnionAgg(e(col), SketchFamily.hll))
 
   /** Finalize a stored sketch to its cardinality estimate. */
   def hll_estimate(col: Column): Column =
@@ -127,7 +127,7 @@ object GraftFunctions {
     * roll up to any coarser grain (standard MG decrement).
     */
   def topk_union_agg(col: Column): Column =
-    aggCol(TopKUnionAgg(e(col)))
+    aggCol(SketchUnionAgg(e(col), SketchFamily.topk))
 
   /** Count-Min frequency sketch as a BinaryType value: point-queryable,
     * mergeable frequency estimates for arbitrary keys (never undercounts;
@@ -145,7 +145,7 @@ object GraftFunctions {
     * warehouse rollup; mixed (depth, width) inputs are an error.
     */
   def cms_union_agg(col: Column): Column =
-    aggCol(CmsUnionAgg(e(col)))
+    aggCol(SketchUnionAgg(e(col), SketchFamily.cms))
 
   /** Engine-portable export: struct(depth, width, total, cells) — the
     * non-zero counters as plain SQL data (see [[CmsWire]]).
@@ -192,7 +192,7 @@ object GraftFunctions {
 
   /** Merge a column of stored GK summaries into one (lossless, same bound). */
   def gk_union_agg(col: Column): Column =
-    aggCol(GkUnionAgg(e(col)))
+    aggCol(SketchUnionAgg(e(col), SketchFamily.gk))
 
   /** Approximate quantile q in [0,1] from a stored GK summary. */
   def gk_quantile(sketch: Column, q: Column): Column =
@@ -233,7 +233,7 @@ object GraftFunctions {
 
   /** Merge a column of stored KMV sketches into one (bottom-k set union). */
   def kmv_union_agg(col: Column): Column =
-    aggCol(KmvUnionAgg(e(col)))
+    aggCol(SketchUnionAgg(e(col), SketchFamily.kmv))
 
   /** Distinct-count estimate from a stored KMV sketch. */
   def kmv_estimate(sketch: Column): Column =
@@ -326,7 +326,7 @@ object GraftFunctions {
     },
     "python_str" -> ((args: Seq[Expression]) => PyStrCoerce(args.head)),
     "hll_union_agg" ->
-      ((args: Seq[Expression]) => HllUnionAgg(args.head).toAggregateExpression()),
+      ((args: Seq[Expression]) => SketchUnionAgg(args.head, SketchFamily.hll).toAggregateExpression()),
     "hll_estimate" -> ((args: Seq[Expression]) => HllEstimate(args.head)),
     "hll_union" -> ((args: Seq[Expression]) => HllUnion(args(0), args(1))),
     "hll_error" -> ((args: Seq[Expression]) => HllError(args.head)),
@@ -349,7 +349,7 @@ object GraftFunctions {
     "cms_query" ->
       ((args: Seq[Expression]) => CmsQuery(args(0), PyStrCoerce(args(1)))),
     "cms_union_agg" ->
-      ((args: Seq[Expression]) => CmsUnionAgg(args.head).toAggregateExpression()),
+      ((args: Seq[Expression]) => SketchUnionAgg(args.head, SketchFamily.cms).toAggregateExpression()),
     "cms_export" -> ((args: Seq[Expression]) => CmsExport(args.head)),
     "cms_import" -> ((args: Seq[Expression]) => CmsImport(args.head)),
     "cms_positions" -> { (args: Seq[Expression]) =>
@@ -376,7 +376,7 @@ object GraftFunctions {
       GkSketchAgg(Cast(args.head, DoubleType), relErr).toAggregateExpression()
     },
     "gk_union_agg" ->
-      ((args: Seq[Expression]) => GkUnionAgg(args.head).toAggregateExpression()),
+      ((args: Seq[Expression]) => SketchUnionAgg(args.head, SketchFamily.gk).toAggregateExpression()),
     "gk_quantile" ->
       ((args: Seq[Expression]) => GkQuantile(args(0), Cast(args(1), DoubleType))),
     "gk_export" -> ((args: Seq[Expression]) => GkExport(args.head)),
@@ -388,13 +388,13 @@ object GraftFunctions {
       TopKSketchAgg(PyStrCoerce(args.head), cap).toAggregateExpression()
     },
     "topk_union_agg" ->
-      ((args: Seq[Expression]) => TopKUnionAgg(args.head).toAggregateExpression()),
+      ((args: Seq[Expression]) => SketchUnionAgg(args.head, SketchFamily.topk).toAggregateExpression()),
     "kmv_sketch_agg" -> { (args: Seq[Expression]) =>
       val k = if (args.length > 1) intArg(args(1), "k") else 1024
       KmvSketchAgg(PyStrCoerce(args.head), k).toAggregateExpression()
     },
     "kmv_union_agg" ->
-      ((args: Seq[Expression]) => KmvUnionAgg(args.head).toAggregateExpression()),
+      ((args: Seq[Expression]) => SketchUnionAgg(args.head, SketchFamily.kmv).toAggregateExpression()),
     "kmv_estimate" -> ((args: Seq[Expression]) => KmvEstimate(args.head)),
     "kmv_jaccard" -> ((args: Seq[Expression]) => KmvJaccard(args(0), args(1))),
     "kmv_intersect_estimate" ->

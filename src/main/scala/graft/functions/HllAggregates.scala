@@ -31,9 +31,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * `str()` before SHA-1, HLL/HyperLogLog.py:110); the function wrappers in
   * [[GraftFunctions]] insert an explicit cast-to-string so longs/ints hash
   * identically to Python (`str(11)` == Spark `CAST(11L AS STRING)`).
+  *
+  * This base holds what `hll_cardinality` and `hll_sketch_agg` share: the
+  * sketch parameters, their check and the per-row add.
   */
-abstract class HllAggBase[R] extends TypedImperativeAggregate[HllSketch]
-    with UnaryLike[Expression] {
+abstract class HllBuildAgg extends SketchBuildAgg[HllSketch] {
   def k: Int
   def bits: Int
   /** Digest algorithm, mirroring the reference's `hash_func` parameter
@@ -41,10 +43,7 @@ abstract class HllAggBase[R] extends TypedImperativeAggregate[HllSketch]
     */
   def hashName: String
 
-  def child: Expression
-  // NOTE: no validation in the constructor body — a non-serializable
-  // superclass's no-arg ctor re-runs during Java deserialization on
-  // executors before the case-class fields are restored (k would read 0).
+  override protected def codec: SketchCodec[HllSketch] = SketchFamily.hll
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != StringType) TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a STRING input (wrappers cast automatically), got ${child.dataType.sql}")
@@ -55,25 +54,13 @@ abstract class HllAggBase[R] extends TypedImperativeAggregate[HllSketch]
     } catch {
       case e: IllegalArgumentException => TypeCheckResult.TypeCheckFailure(e.getMessage)
     }
-  override def nullable: Boolean = false
 
   override def createAggregationBuffer(): HllSketch = HllSketch.empty(k, bits, hashName)
 
-  override def update(buffer: HllSketch, input: InternalRow): HllSketch = {
-    val v = child.eval(input)
-    if (v != null) {
-      val b = v.asInstanceOf[UTF8String].getBytes
-      buffer.updateBytes(b, 0, b.length)
-    }
-    buffer
+  override protected def add(buffer: HllSketch, v: Any): Unit = {
+    val b = v.asInstanceOf[UTF8String].getBytes
+    buffer.updateBytes(b, 0, b.length)
   }
-
-  override def merge(b1: HllSketch, b2: HllSketch): HllSketch = b1.merge(b2)
-
-  override def serialize(buffer: HllSketch): Array[Byte] = buffer.serialize()
-
-  override def deserialize(bytes: Array[Byte]): HllSketch =
-    HllSketch.deserialize(bytes)
 }
 
 /** `hll_cardinality(col, k, bits)` -> Double: the reference's flagship
@@ -86,7 +73,7 @@ case class HllCardinality(
     hashName: String = "SHA-1",
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends HllAggBase[Double] {
+  extends HllBuildAgg {
 
   override def dataType: DataType = DoubleType
   override def eval(buffer: HllSketch): Any = buffer.cardinality
@@ -109,7 +96,7 @@ case class HllSketchAgg(
     hashName: String = "SHA-1",
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends HllAggBase[Array[Byte]] {
+  extends HllBuildAgg {
 
   override def dataType: DataType = BinaryType
   override def eval(buffer: HllSketch): Any = buffer.serialize()
@@ -186,74 +173,10 @@ case class HllCardinalityFast(
   override def prettyName: String = "hll_cardinality_fast"
 }
 
-/** Mutable union buffer: starts empty (sketch=null) and adopts the first
-  * sketch's (k, bits), mirroring the reference's `__add__` which builds a
-  * fresh instance then merges (HLL/HyperLogLog.py:171-179).
-  */
-final class HllUnionBuffer(var sketch: HllSketch) {
-  def absorb(bytes: Array[Byte]): Unit = {
-    val s = HllSketch.deserialize(bytes)
-    if (sketch == null) sketch = s else sketch.merge(s)
-  }
-  def absorbBuffer(other: HllUnionBuffer): Unit =
-    if (other.sketch != null) {
-      if (sketch == null) sketch = other.sketch else sketch.merge(other.sketch)
-    }
-}
-
-/** `hll_union_agg(sketchCol)` -> Binary: merge stored sketches
-  * (the reference's n-ary `merge`, HLL/HyperLogLog.py:157-169).
-  */
-case class HllUnionAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HllUnionBuffer]
-  with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BINARY sketch input, got ${child.dataType.sql}")
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-
-  override def createAggregationBuffer(): HllUnionBuffer = new HllUnionBuffer(null)
-
-  override def update(buffer: HllUnionBuffer, input: InternalRow): HllUnionBuffer = {
-    val v = child.eval(input)
-    if (v != null) buffer.absorb(v.asInstanceOf[Array[Byte]])
-    buffer
-  }
-
-  override def merge(b1: HllUnionBuffer, b2: HllUnionBuffer): HllUnionBuffer = {
-    b1.absorbBuffer(b2)
-    b1
-  }
-
-  override def eval(buffer: HllUnionBuffer): Any =
-    if (buffer.sketch == null) null else buffer.sketch.serialize()
-
-  override def serialize(buffer: HllUnionBuffer): Array[Byte] =
-    if (buffer.sketch == null) Array.emptyByteArray else buffer.sketch.serialize()
-
-  override def deserialize(bytes: Array[Byte]): HllUnionBuffer =
-    new HllUnionBuffer(if (bytes.isEmpty) null else HllSketch.deserialize(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): HllUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): HllUnionAgg = copy(child = c)
-  override def prettyName: String = "hll_union_agg"
-}
-
 /** Scalar `hll_estimate(sketchCol)` -> Double: finalize a stored sketch. */
 case class HllEstimate(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with BinarySketchInput {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BINARY sketch input, got ${child.dataType.sql}")
   override def dataType: DataType = DoubleType
 
   override def nullSafeEval(v: Any): Any =
@@ -291,12 +214,8 @@ case class HllUnion(left: Expression, right: Expression)
   * alpha, error; HLL/HyperLogLog.py:76-86).
   */
 case class HllInfo(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with BinarySketchInput {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BINARY sketch input, got ${child.dataType.sql}")
 
   override def dataType: DataType = StructType(Seq(
     StructField("k", IntegerType, nullable = false),
@@ -319,12 +238,8 @@ case class HllInfo(child: Expression)
   * error 1.04/sqrt(m) of a stored sketch (HLL/HyperLogLog.py:86).
   */
 case class HllError(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with BinarySketchInput {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BINARY sketch input, got ${child.dataType.sql}")
   override def dataType: DataType = DoubleType
 
   override def nullSafeEval(v: Any): Any =
@@ -373,12 +288,8 @@ object HllWire {
   * register listing of a stored sketch as plain SQL data (see [[HllWire]]).
   */
 case class HllExport(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with BinarySketchInput {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BINARY sketch input, got ${child.dataType.sql}")
   override def dataType: DataType = HllWire.wireType
 
   override def nullSafeEval(v: Any): Any = {

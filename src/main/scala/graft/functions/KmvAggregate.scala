@@ -4,8 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -225,7 +223,7 @@ case class KmvSketchAgg(
     k: Int = 1024,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvSketch] with UnaryLike[Expression] {
+  extends SketchBuildAgg[KmvSketch] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != StringType)
@@ -235,99 +233,38 @@ case class KmvSketchAgg(
     else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
+  override protected def codec: SketchCodec[KmvSketch] = SketchFamily.kmv
   override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
-
-  override def update(buffer: KmvSketch, input: InternalRow): KmvSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.addHash(KmvSketch.hash64(v.asInstanceOf[UTF8String]))
-    buffer
-  }
-
-  override def merge(b1: KmvSketch, b2: KmvSketch): KmvSketch = b1.merge(b2)
+  override protected def add(buffer: KmvSketch, v: Any): Unit =
+    buffer.addHash(KmvSketch.hash64(v.asInstanceOf[UTF8String]))
   override def eval(buffer: KmvSketch): Any = buffer.serialize()
-  override def serialize(buffer: KmvSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): KmvSketch = KmvSketch.deserialize(bytes)
   override def withNewMutableAggBufferOffset(o: Int): KmvSketchAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): KmvSketchAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): KmvSketchAgg = copy(child = c)
   override def prettyName: String = "kmv_sketch_agg"
 }
 
-/** `kmv_union_agg(sketchCol)` -> BinaryType merged sketch. The empty buffer
-  * carries no k; it adopts the first sketch it sees (sentinel k=0 never
-  * serializes: an all-null group evaluates to the empty-header form below).
-  */
-case class KmvUnionAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KmvUnionAgg.Buf] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires BINARY sketch input, got ${child.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): KmvUnionAgg.Buf = new KmvUnionAgg.Buf(null)
-
-  override def update(buffer: KmvUnionAgg.Buf, input: InternalRow): KmvUnionAgg.Buf = {
-    val v = child.eval(input)
-    if (v != null) {
-      val bytes = v.asInstanceOf[Array[Byte]]
-      // a 0-byte value is a stored all-null-group union output: empty set,
-      // contributes nothing — re-aggregating stored union results must work
-      if (bytes.length > 0) buffer.absorb(KmvSketch.deserialize(bytes))
-    }
-    buffer
-  }
-
-  override def merge(b1: KmvUnionAgg.Buf, b2: KmvUnionAgg.Buf): KmvUnionAgg.Buf = {
-    if (b2.sk != null) b1.absorb(b2.sk)
-    b1
-  }
-
-  override def eval(buffer: KmvUnionAgg.Buf): Any = buffer.serialize()
-  override def serialize(buffer: KmvUnionAgg.Buf): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): KmvUnionAgg.Buf =
-    if (bytes.length == 0) new KmvUnionAgg.Buf(null)
-    else new KmvUnionAgg.Buf(KmvSketch.deserialize(bytes))
-  override def withNewMutableAggBufferOffset(o: Int): KmvUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): KmvUnionAgg = copy(child = c)
-  override def prettyName: String = "kmv_union_agg"
-}
-
-object KmvUnionAgg {
-  final class Buf(var sk: KmvSketch) extends Serializable {
-    def absorb(other: KmvSketch): Unit =
-      if (sk == null) sk = other else sk.merge(other)
-    // an all-null group serializes (and evals) as zero bytes; every scalar
-    // consumer (kmv_estimate / kmv_jaccard / kmv_intersect_estimate)
-    // special-cases the empty buffer as the empty set rather than throwing
-    def serialize(): Array[Byte] =
-      if (sk == null) Array.emptyByteArray else sk.serialize()
+private object KmvPair {
+  /** `f` over two stored sketches, or 0.0 when either is the empty set
+    * (`kmv_union_agg`'s all-null-group output).
+    */
+  def orZero(a: Any, b: Any)(f: (KmvSketch, KmvSketch) => Double): Double = {
+    val sa = SketchFamily.kmv.read(a.asInstanceOf[Array[Byte]])
+    val sb = SketchFamily.kmv.read(b.asInstanceOf[Array[Byte]])
+    if (sa == null || sb == null) 0.0 else f(sa, sb)
   }
 }
 
 /** `kmv_estimate(sketch)` -> DOUBLE distinct-count estimate. */
 case class KmvEstimate(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with BinarySketchInput {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires BINARY sketch input, got ${child.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-
+  override protected def sketchInput: String = "BINARY sketch input"
   override def dataType: DataType = DoubleType
 
   override protected def nullSafeEval(sk: Any): Any = {
-    val bytes = sk.asInstanceOf[Array[Byte]]
-    if (bytes.length == 0) 0.0 else KmvSketch.deserialize(bytes).estimate
+    val s = SketchFamily.kmv.read(sk.asInstanceOf[Array[Byte]])
+    if (s == null) 0.0 else s.estimate
   }
 
   override protected def withNewChildInternal(c: Expression): KmvEstimate = copy(child = c)
@@ -346,13 +283,8 @@ case class KmvJaccard(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val ab = a.asInstanceOf[Array[Byte]]
-    val bb = b.asInstanceOf[Array[Byte]]
-    // a 0-byte value is kmv_union_agg's all-null-group output: empty set
-    if (ab.length == 0 || bb.length == 0) 0.0
-    else KmvSketch.jaccard(KmvSketch.deserialize(ab), KmvSketch.deserialize(bb))
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    KmvPair.orZero(a, b)(KmvSketch.jaccard)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): KmvJaccard =
     copy(left = l, right = r)
@@ -371,14 +303,8 @@ case class KmvIntersectEstimate(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val ab = a.asInstanceOf[Array[Byte]]
-    val bb = b.asInstanceOf[Array[Byte]]
-    // a 0-byte value is kmv_union_agg's all-null-group output: empty set
-    if (ab.length == 0 || bb.length == 0) 0.0
-    else KmvSketch.intersectEstimate(
-      KmvSketch.deserialize(ab), KmvSketch.deserialize(bb))
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    KmvPair.orZero(a, b)(KmvSketch.intersectEstimate)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): KmvIntersectEstimate =
     copy(left = l, right = r)
@@ -406,10 +332,10 @@ case class KmvIntersectN(children: Seq[Expression])
   override def eval(input: InternalRow): Any = {
     val bufs = children.map(_.eval(input))
     if (bufs.exists(_ == null)) return null
-    val bytes = bufs.map(_.asInstanceOf[Array[Byte]])
-    // any all-null-group (0-byte) operand is the empty set: intersection 0
-    if (bytes.exists(_.length == 0)) 0.0
-    else KmvSketch.intersectAllEstimate(bytes.map(KmvSketch.deserialize))
+    val sketches = bufs.map(b => SketchFamily.kmv.read(b.asInstanceOf[Array[Byte]]))
+    // any empty-set operand makes the intersection 0
+    if (sketches.contains(null)) 0.0
+    else KmvSketch.intersectAllEstimate(sketches)
   }
 
   override protected def withNewChildrenInternal(
@@ -460,21 +386,16 @@ object KmvWire {
   * all-null-group union output, zero bytes) exports as (0, hash, []).
   */
 case class KmvExport(child: Expression)
-  extends UnaryExpression with CodegenFallback {
+  extends UnaryExpression with CodegenFallback with BinarySketchInput {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BINARY sketch input, got ${child.dataType.sql}")
   override def dataType: DataType = KmvWire.wireType
 
   override def nullSafeEval(v: Any): Any = {
-    val bytes = v.asInstanceOf[Array[Byte]]
+    val s = SketchFamily.kmv.read(v.asInstanceOf[Array[Byte]])
     val hn = UTF8String.fromString(KmvWire.hashName)
-    if (bytes.length == 0)
+    if (s == null)
       return InternalRow(0, hn,
         new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any]))
-    val s = KmvSketch.deserialize(bytes)
     val out = new Array[Any](s.values.size)
     val it = s.values.iterator() // TreeSet iterates in ascending unsigned order
     var i = 0
@@ -540,14 +461,12 @@ case class KmvDifferenceEstimate(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val ab = a.asInstanceOf[Array[Byte]]
-    val bb = b.asInstanceOf[Array[Byte]]
-    // a 0-byte value is kmv_union_agg's all-null-group output: empty set —
+    val sa = SketchFamily.kmv.read(a.asInstanceOf[Array[Byte]])
+    val sb = SketchFamily.kmv.read(b.asInstanceOf[Array[Byte]])
     // empty A has nothing to subtract from; empty B subtracts nothing
-    if (ab.length == 0) 0.0
-    else if (bb.length == 0) KmvSketch.deserialize(ab).estimate
-    else KmvSketch.differenceEstimate(
-      KmvSketch.deserialize(ab), KmvSketch.deserialize(bb))
+    if (sa == null) 0.0
+    else if (sb == null) sa.estimate
+    else KmvSketch.differenceEstimate(sa, sb)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): KmvDifferenceEstimate =

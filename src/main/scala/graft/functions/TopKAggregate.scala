@@ -4,8 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -145,7 +143,7 @@ case class ApproxTopK(
     capacity: Int = 1024,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKSketch] with UnaryLike[Expression] {
+  extends SketchBuildAgg[TopKSketch] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != StringType)
@@ -159,25 +157,16 @@ case class ApproxTopK(
     StructField("item", StringType, nullable = false),
     StructField("count", LongType, nullable = false))), containsNull = false)
 
-  override def nullable: Boolean = false
-
+  override protected def codec: SketchCodec[TopKSketch] = SketchFamily.topk
   override def createAggregationBuffer(): TopKSketch = new TopKSketch(capacity)
-
-  override def update(buffer: TopKSketch, input: InternalRow): TopKSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[UTF8String].toString)
-    buffer
-  }
-
-  override def merge(b1: TopKSketch, b2: TopKSketch): TopKSketch = b1.merge(b2)
+  override protected def add(buffer: TopKSketch, v: Any): Unit =
+    buffer.add(v.asInstanceOf[UTF8String].toString)
 
   override def eval(buffer: TopKSketch): Any =
     new GenericArrayData(buffer.topK(k).map { case (item, c) =>
       InternalRow(UTF8String.fromString(item), c)
     })
 
-  override def serialize(buffer: TopKSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): TopKSketch = TopKSketch.deserialize(bytes)
   override def withNewMutableAggBufferOffset(o: Int): ApproxTopK = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): ApproxTopK = copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): ApproxTopK = copy(child = c)
@@ -186,15 +175,17 @@ case class ApproxTopK(
 
 /** `topk_sketch_agg(col, capacity)` -> BinaryType stored MG sketch — the
   * sketch-warehouse variant of [[ApproxTopK]] (store per-(day, group)
-  * sketches once, merge and read top-k at any later rollup). Same state,
-  * same merge; eval keeps the bytes instead of finalizing to an array.
+  * sketches once, merge with `topk_union_agg` and read top-k at any later
+  * rollup, with the standard MG decrement preserving the
+  * frequency > n/capacity retention guarantee). Same state, same merge;
+  * eval keeps the bytes instead of finalizing to an array.
   */
 case class TopKSketchAgg(
     child: Expression,
     capacity: Int = 1024,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKSketch] with UnaryLike[Expression] {
+  extends SketchBuildAgg[TopKSketch] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != StringType)
@@ -205,84 +196,15 @@ case class TopKSketchAgg(
     else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
+  override protected def codec: SketchCodec[TopKSketch] = SketchFamily.topk
   override def createAggregationBuffer(): TopKSketch = new TopKSketch(capacity)
-
-  override def update(buffer: TopKSketch, input: InternalRow): TopKSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[UTF8String].toString)
-    buffer
-  }
-
-  override def merge(b1: TopKSketch, b2: TopKSketch): TopKSketch = b1.merge(b2)
+  override protected def add(buffer: TopKSketch, v: Any): Unit =
+    buffer.add(v.asInstanceOf[UTF8String].toString)
   override def eval(buffer: TopKSketch): Any = buffer.serialize()
-  override def serialize(buffer: TopKSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): TopKSketch = TopKSketch.deserialize(bytes)
   override def withNewMutableAggBufferOffset(o: Int): TopKSketchAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): TopKSketchAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): TopKSketchAgg = copy(child = c)
   override def prettyName: String = "topk_sketch_agg"
-}
-
-/** Union-aggregate buffer: capacity comes from the FIRST stored sketch
-  * merged in; an all-null group evals to zero-length bytes (the shared
-  * empty-sketch convention).
-  */
-final class TopKUnionBuffer extends Serializable {
-  var sk: TopKSketch = null
-  def fold(other: TopKSketch): Unit =
-    if (sk == null) sk = other else sk.merge(other)
-  def serialize(): Array[Byte] =
-    if (sk == null) Array.emptyByteArray else sk.serialize()
-}
-
-/** `topk_union_agg(sketchCol)` -> BinaryType: merge stored MG sketches —
-  * per-(day, group) heavy-hitter sketches roll up to any coarser grain
-  * with the standard MG decrement, preserving the
-  * frequency > n/capacity retention guarantee.
-  */
-case class TopKUnionAgg(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[TopKUnionBuffer] with UnaryLike[Expression] {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires BINARY sketch input, got ${child.dataType.sql}")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): TopKUnionBuffer = new TopKUnionBuffer
-
-  override def update(buffer: TopKUnionBuffer, input: InternalRow): TopKUnionBuffer = {
-    val v = child.eval(input)
-    if (v != null) {
-      val bytes = v.asInstanceOf[Array[Byte]]
-      if (bytes.nonEmpty) buffer.fold(TopKSketch.deserialize(bytes))
-    }
-    buffer
-  }
-
-  override def merge(b1: TopKUnionBuffer, b2: TopKUnionBuffer): TopKUnionBuffer = {
-    if (b2.sk != null) b1.fold(b2.sk)
-    b1
-  }
-
-  override def eval(buffer: TopKUnionBuffer): Any = buffer.serialize()
-  override def serialize(buffer: TopKUnionBuffer): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): TopKUnionBuffer = {
-    val b = new TopKUnionBuffer
-    if (bytes.nonEmpty) b.sk = TopKSketch.deserialize(bytes)
-    b
-  }
-  override def withNewMutableAggBufferOffset(o: Int): TopKUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TopKUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildInternal(c: Expression): TopKUnionAgg = copy(child = c)
-  override def prettyName: String = "topk_union_agg"
 }
 
 /** Misra-Gries row-wire layout (see WIRE.md): capacity + the retained
@@ -317,20 +239,16 @@ object TopKWire {
   * identity is export(import(export(s))) == export(s)).
   */
 case class TopKExport(child: Expression)
-  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with CodegenFallback {
+  extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with CodegenFallback
+  with BinarySketchInput {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a BINARY sketch input, got ${child.dataType.sql}")
   override def dataType: DataType = TopKWire.wireType
 
   override def nullSafeEval(v: Any): Any = {
-    val bytes = v.asInstanceOf[Array[Byte]]
-    if (bytes.isEmpty) // empty union output -> (0, []) wire
+    val s = SketchFamily.topk.read(v.asInstanceOf[Array[Byte]])
+    if (s == null) // empty set -> (0, []) wire
       return InternalRow(0,
         new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any]))
-    val s = TopKSketch.deserialize(bytes)
     val sorted = s.topK(Int.MaxValue) // (count DESC, item ASC) — all entries
     val out = new Array[Any](sorted.length)
     var i = 0

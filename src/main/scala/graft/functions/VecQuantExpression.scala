@@ -4,8 +4,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -63,8 +61,10 @@ final class VecMinMax extends Serializable {
   }
 }
 
-object VecMinMax {
-  def deserialize(bytes: Array[Byte]): VecMinMax = {
+object VecMinMax extends SketchCodec[VecMinMax] {
+  def write(s: VecMinMax): Array[Byte] = s.serialize()
+  def merge(a: VecMinMax, b: VecMinMax): VecMinMax = a.merge(b)
+  def read(bytes: Array[Byte]): VecMinMax = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val n = bb.getInt
     require(bytes.length == 4 + 16 * n, s"vec_minmax buffer corrupt: ${bytes.length} bytes for n=$n")
@@ -88,7 +88,7 @@ case class VecMinMaxAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[VecMinMax] with UnaryLike[Expression] {
+  extends SketchBuildAgg[VecMinMax] {
 
   private lazy val isFloat: Boolean = child.dataType match {
     case ArrayType(FloatType, _) => true
@@ -105,17 +105,11 @@ case class VecMinMaxAgg(
     StructType(Seq(
       StructField("mn", DoubleType, nullable = false),
       StructField("mx", DoubleType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
 
+  override protected def codec: SketchCodec[VecMinMax] = VecMinMax
   override def createAggregationBuffer(): VecMinMax = new VecMinMax
-
-  override def update(buffer: VecMinMax, input: InternalRow): VecMinMax = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v.asInstanceOf[ArrayData], isFloat)
-    buffer
-  }
-
-  override def merge(b1: VecMinMax, b2: VecMinMax): VecMinMax = b1.merge(b2)
+  override protected def add(buffer: VecMinMax, v: Any): Unit =
+    buffer.update(v.asInstanceOf[ArrayData], isFloat)
 
   override def eval(buffer: VecMinMax): Any = {
     val n = if (buffer.mins == null) 0 else buffer.mins.length
@@ -125,8 +119,6 @@ case class VecMinMaxAgg(
     new GenericArrayData(out)
   }
 
-  override def serialize(buffer: VecMinMax): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): VecMinMax = VecMinMax.deserialize(bytes)
   override def withNewMutableAggBufferOffset(o: Int): VecMinMaxAgg = copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): VecMinMaxAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): VecMinMaxAgg = copy(child = c)

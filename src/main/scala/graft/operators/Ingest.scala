@@ -218,6 +218,48 @@ object Ingest {
     }.toDF("url", "digest", "record_id")
   }
 
+  /** Per-url verdicts across `n` consecutive re-crawl epochs in ONE pass —
+    * the multi-epoch shape of [[revisitVerdicts]] (r15, guide §2.4/§8):
+    * each epoch's archives are fabricated/parsed exactly ONCE into an
+    * epoch-stamped digest table (url, digest, record_id, epoch — a few
+    * dozen bytes per capture), and each epoch compares to its predecessor
+    * with a lag window over the url shuffle instead of n-1 separate index
+    * joins, each of which re-derived its prev side from raw archives. Pairwise
+    * `revisitVerdicts(ingestWarc(e), revisitIndex(e-1))` costs 2(n-1)
+    * archive passes and n-1 joins; this costs n archive passes and one
+    * exchange of digests. Row-identical to the pairwise union for
+    * (url, verdict): a url absent from the immediately-preceding epoch is
+    * 'new' (the epoch-continuity check below — lag alone would reach
+    * further back), and rows exist exactly for captures present in
+    * epochs 1..n-1, like the pairwise left join. Parity is asserted
+    * against the pairwise path in ArchiveIngestSpec.
+    *
+    * Same-epoch rule: a url captured more than once in one epoch has its
+    * captures ordered by `record_id` within the epoch, so the verdicts do
+    * not depend on partitioning. The first capture compares to the
+    * previous epoch's last one; each later capture follows a capture of
+    * its own epoch and reads 'new'.
+    */
+  def revisitVerdictsOverEpochs(
+      archivesByEpoch: Seq[Dataset[Multimodal.MediaRecord]]): org.apache.spark.sql.DataFrame = {
+    require(archivesByEpoch.size >= 2,
+      s"revisitVerdictsOverEpochs: need >= 2 epochs, got ${archivesByEpoch.size}")
+    val digests = archivesByEpoch.zipWithIndex.map { case (a, e) =>
+      revisitIndex(a).select(col("url"), col("digest"), col("record_id"), lit(e).as("epoch"))
+    }.reduce(_ unionByName _)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("url")).orderBy(col("epoch"), col("record_id"))
+    digests
+      .withColumn("prev_digest", lag(col("digest"), 1).over(w))
+      .withColumn("prev_epoch", lag(col("epoch"), 1).over(w))
+      .filter(col("epoch") >= 1)
+      .select(col("url"), col("epoch"),
+        when(col("prev_epoch").isNull || col("prev_epoch") =!= col("epoch") - 1,
+            lit("new"))
+          .when(col("digest") === col("prev_digest"), lit("revisit"))
+          .otherwise(lit("response")).as("verdict"))
+  }
+
   /** Change-rate estimation from revisit history — the recrawl-priority
     * input (Cho & Garcia-Molina '03: pages change at wildly different
     * rates, and a fixed recrawl interval wastes most of a crawl's fetch
@@ -237,42 +279,6 @@ object Ingest {
     * url-grain aggregate — the verdict tables are tiny relative to the
     * crawls they summarize (no bodies, no digests).
     */
-  /** Per-url verdicts across `n` consecutive re-crawl epochs in ONE pass —
-    * the multi-epoch shape of [[revisitVerdicts]] (r15, guide §2.4/§8):
-    * each epoch's archives are fabricated/parsed exactly ONCE into an
-    * epoch-stamped digest table (url, digest, epoch — a few dozen bytes
-    * per capture), and each epoch compares to its predecessor with a lag
-    * window over the url shuffle instead of n-1 separate index joins,
-    * each of which re-derived its prev side from raw archives. Pairwise
-    * `revisitVerdicts(ingestWarc(e), revisitIndex(e-1))` costs 2(n-1)
-    * archive passes and n-1 joins; this costs n archive passes and one
-    * exchange of digests. Row-identical to the pairwise union for
-    * (url, verdict): a url absent from the immediately-preceding epoch is
-    * 'new' (the epoch-continuity check below — lag alone would reach
-    * further back), and rows exist exactly for captures present in
-    * epochs 1..n-1, like the pairwise left join. Parity is asserted
-    * against the pairwise path in ArchiveIngestSpec.
-    */
-  def revisitVerdictsOverEpochs(
-      archivesByEpoch: Seq[Dataset[Multimodal.MediaRecord]]): org.apache.spark.sql.DataFrame = {
-    require(archivesByEpoch.size >= 2,
-      s"revisitVerdictsOverEpochs: need >= 2 epochs, got ${archivesByEpoch.size}")
-    val digests = archivesByEpoch.zipWithIndex.map { case (a, e) =>
-      revisitIndex(a).select(col("url"), col("digest"), lit(e).as("epoch"))
-    }.reduce(_ unionByName _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("url")).orderBy(col("epoch"))
-    digests
-      .withColumn("prev_digest", lag(col("digest"), 1).over(w))
-      .withColumn("prev_epoch", lag(col("epoch"), 1).over(w))
-      .filter(col("epoch") >= 1)
-      .select(col("url"), col("epoch"),
-        when(col("prev_epoch").isNull || col("prev_epoch") =!= col("epoch") - 1,
-            lit("new"))
-          .when(col("digest") === col("prev_digest"), lit("revisit"))
-          .otherwise(lit("response")).as("verdict"))
-  }
-
   def changeRate(verdicts: org.apache.spark.sql.DataFrame,
       epochs: Int): org.apache.spark.sql.DataFrame = {
     require(epochs >= 1, s"changeRate: epochs >= 1, got $epochs")

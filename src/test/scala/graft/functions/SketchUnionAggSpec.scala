@@ -1,13 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.QuantileSummaries
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** cms_union_agg / topk_union_agg — the warehouse rollups that completed
-  * the family (HLL/KMV/GK already had theirs): merged stored sketches must
-  * equal the single-pass sketch, independent of partitioning; parameter
-  * mismatches fail loudly; all-null groups follow the empty-bytes
+/** The `*_union_agg` warehouse rollups of all five stored-sketch families:
+  * merged stored sketches must equal the single-pass sketch, independent
+  * of partitioning; each family's empty-group output, 0-byte input and
+  * mixed-parameter rules are pinned (the table in WIRE.md, "Empty sketch
+  * and union rules"); all-null groups follow each family's empty-sketch
   * convention end to end (query/export/import).
   */
 class SketchUnionAggSpec extends AnyFunSuite {
@@ -17,6 +19,146 @@ class SketchUnionAggSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** One row of the union contract. `build(c, alt)` builds the family's
+    * sketch from column `c`, with its second parameter set when `alt`;
+    * `canonical` maps a union output to the value two equal sketches share
+    * (the bytes, except Misra-Gries, whose byte wire follows hash-map
+    * order and so compares through its sorted row export).
+    */
+  private case class Family(
+      name: String,
+      input: String,
+      build: (Column, Boolean) => Column,
+      union: Column => Column,
+      canonical: Column => Column,
+      emptyGroup: Option[Seq[Byte]], // None: SQL NULL
+      zeroByteRejected: Option[String], // None: read as the empty set
+      mixedFails: Boolean)
+
+  private val families = Seq(
+    Family("hll", "k",
+      (c, alt) => GraftFunctions.hll_sketch_agg(c, if (alt) 2048 else 1024),
+      GraftFunctions.hll_union_agg, identity,
+      None, Some("sketch buffer truncated"), mixedFails = true),
+    Family("kmv", "k",
+      (c, alt) => GraftFunctions.kmv_sketch_agg(c, if (alt) 512 else 256),
+      GraftFunctions.kmv_union_agg, identity,
+      Some(Seq.empty), None, mixedFails = true),
+    Family("cms", "k",
+      (c, alt) => GraftFunctions.cms_sketch_agg(c, 5, if (alt) 1024 else 512),
+      GraftFunctions.cms_union_agg, identity,
+      Some(Seq.empty), None, mixedFails = true),
+    Family("topk", "k",
+      (c, alt) => GraftFunctions.topk_sketch_agg(c, if (alt) 512 else 256),
+      GraftFunctions.topk_union_agg, GraftFunctions.topk_export,
+      Some(Seq.empty), None, mixedFails = true),
+    Family("gk", "x",
+      (c, alt) => GraftFunctions.gk_sketch_agg(c, if (alt) 0.05 else 0.01),
+      GraftFunctions.gk_union_agg, identity,
+      Some(new GkBuffer(QuantileSummaries.defaultRelativeError).serialize().toSeq),
+      Some("gk buffer truncated"), mixedFails = false))
+
+  /** 13 days of string keys and distinct doubles (a fixed permutation of
+    * 0 until 20000, so a value's rank is the value itself).
+    */
+  private def days: DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    rnd.shuffle((0 until 20000).toVector).zipWithIndex
+      .map { case (x, i) => (i % 13, s"key${i % 211}", x.toDouble) }
+      .toDF("day", "k", "x")
+  }
+
+  private def sketches(f: Family, alt: Boolean = false): DataFrame =
+    days.groupBy("day").agg(f.build(col(f.input), alt).as("sk")).select("sk")
+
+  private def unionOf(f: Family, df: DataFrame): org.apache.spark.sql.Row =
+    df.agg(f.canonical(f.union(col("sk")))).collect().head
+
+  private def sameValue(a: org.apache.spark.sql.Row, b: org.apache.spark.sql.Row): Boolean =
+    (a.get(0), b.get(0)) match {
+      case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
+      case (x, y) => x == y
+    }
+
+  private def messages(t: Throwable): Iterator[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+
+  test("union contract: an all-null group and an empty input give the family's empty output") {
+    import spark.implicits._
+    val nulls = Seq.fill(3)((1, null: Array[Byte])).toDF("g", "sk")
+    for (f <- families) {
+      val grouped = nulls.groupBy("g").agg(f.union(col("sk"))).collect().head
+      val global = nulls.filter(lit(false)).agg(f.union(col("sk"))).collect().head
+      for (r <- Seq(grouped.toSeq.last, global.get(0))) f.emptyGroup match {
+        case None => assert(r == null, f.name)
+        case Some(want) => assert(r.asInstanceOf[Array[Byte]].toSeq == want, f.name)
+      }
+    }
+    // GK's empty set is any count-0 summary: unioning only those, at a
+    // non-default error, still gives the default-error empty summary
+    val gk = families.find(_.name == "gk").get
+    val emptyGk = Seq(Option.empty[Double]).toDF("x")
+      .agg(GraftFunctions.gk_sketch_agg(col("x"), 0.05).as("sk"))
+    assert(unionOf(gk, emptyGk).getAs[Array[Byte]](0).toSeq == gk.emptyGroup.get)
+  }
+
+  test("union contract: a 0-byte input is the empty set or rejected, per family") {
+    import spark.implicits._
+    val zero = Seq(Array.emptyByteArray).toDF("sk")
+    for (f <- families) f.zeroByteRejected match {
+      case Some(msg) =>
+        val e = intercept[Exception](zero.agg(f.union(col("sk"))).collect())
+        assert(messages(e).exists(_.contains(msg)), s"${f.name}: ${e.getMessage}")
+      case None =>
+        val alone = zero.agg(f.union(col("sk"))).collect().head.getAs[Array[Byte]](0)
+        assert(alone.toSeq == f.emptyGroup.get, f.name)
+        val real = sketches(f)
+        assert(sameValue(unionOf(f, real.union(zero).coalesce(1)), unionOf(f, real.coalesce(1))),
+          f.name)
+    }
+  }
+
+  test("union contract: mixed parameters fail, except GK, which merges at the max error") {
+    for (f <- families) {
+      val mixed = sketches(f).union(sketches(f, alt = true))
+      if (f.mixedFails)
+        intercept[Exception](mixed.agg(f.union(col("sk"))).collect())
+      else {
+        val out = mixed.agg(f.union(col("sk"))).collect().head.getAs[Array[Byte]](0)
+        assert(GkBuffer.deserialize(out).relativeError == 0.05, f.name)
+      }
+    }
+  }
+
+  test("union contract: null rows are skipped") {
+    for (f <- families) {
+      val real = sketches(f).coalesce(1)
+      val withNulls = real.select(explode(array(col("sk"), lit(null).cast("binary"))).as("sk"))
+      assert(sameValue(unionOf(f, withNulls), unionOf(f, real)), f.name)
+    }
+  }
+
+  test("union contract: rollups equal the single-pass sketch at 1 and 7 partitions") {
+    for (f <- families if f.name != "gk"; parts <- Seq(1, 7)) {
+      val direct = days.agg(f.canonical(f.build(col(f.input), false))).collect().head
+      val rolled = days.repartition(parts).groupBy("day")
+        .agg(f.build(col(f.input), false).as("sk"))
+      assert(sameValue(unionOf(f, rolled), direct), s"${f.name} parts=$parts")
+    }
+  }
+
+  test("union contract: the GK rollup's p50 stays within its rank bound at 1 and 7 partitions") {
+    for (parts <- Seq(1, 7)) {
+      val p50 = days.repartition(parts).groupBy("day")
+        .agg(GraftFunctions.gk_sketch_agg(col("x"), 0.01).as("sk"))
+        .agg(GraftFunctions.gk_quantile(GraftFunctions.gk_union_agg(col("sk")), lit(0.5)))
+        .collect().head.getDouble(0)
+      // values are 0 until 20000, so p50's rank is p50 itself
+      assert(math.abs(p50 - 10000) <= 0.01 * 20000, s"parts=$parts p50=$p50")
+    }
+  }
 
   test("cms: daily rollup == single-pass sketch, byte-identical, any partitioning") {
     import spark.implicits._

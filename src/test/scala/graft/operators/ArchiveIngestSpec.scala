@@ -245,6 +245,40 @@ class ArchiveIngestSpec extends AnyFunSuite {
     } finally spark.stop()
   }
 
+  test("revisitVerdictsOverEpochs: two captures of a url in one epoch, any partitioning") {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[2]").config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    try {
+      import spark.implicits._
+      def archive(epoch: Int, tag: String, body: String) = {
+        val rec = Map("WARC-Type" -> "response",
+          "WARC-Target-URI" -> "http://h.invalid/dup",
+          "WARC-Record-ID" -> s"<urn:t:dup:$epoch:$tag>",
+          "WARC-Date" -> "2026-01-01T00:00:00Z",
+          "Content-Type" -> "application/http;msgtype=response") ->
+          Warc.httpResponse(200, "text/plain", body.getBytes("UTF-8"))
+        graft.operators.Multimodal.MediaRecord(epoch.toLong, s"t://e$epoch$tag.warc",
+          "application/warc", Warc.writeWarc(Seq(rec)), Map.empty)
+      }
+      // epoch 1 captures the url twice: record 'a' keeps epoch 0's body,
+      // record 'b' changes it, and 'b' arrives first
+      val crawls = Seq(
+        Seq(archive(0, "a", "v0")),
+        Seq(archive(1, "b", "v1"), archive(1, "a", "v0")),
+        Seq(archive(2, "a", "v1")))
+      // 'a' (lower record_id) compares to epoch 0: revisit; 'b' follows a
+      // capture of its own epoch: new; epoch 2 compares to 'b': revisit
+      val want = Seq((1, "new"), (1, "revisit"), (2, "revisit"))
+      for (parts <- Seq(1, 7); run <- 1 to 2) {
+        val epochs = crawls.map(c => spark.createDataset(c).repartition(parts))
+        val got = Ingest.revisitVerdictsOverEpochs(epochs).collect()
+          .map(r => (r.getInt(1), r.getString(2))).sorted.toSeq
+        assert(got == want, s"parts=$parts run=$run")
+      }
+    } finally spark.stop()
+  }
+
   test("self-dedup rewrite: one stored body per digest, dups become revisit, order kept") {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.sql.shuffle.partitions", "2")
