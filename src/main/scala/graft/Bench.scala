@@ -11,10 +11,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // The WindowExec "No Partition Defined" warnings in the bench tail are
-    // benign: a handful of contract queries (e.g. tx_vocab_growth's
-    // cumulative-novelty window) legitimately run an ORDER-BY-only window
-    // over an already-reduced small aggregate, not over raw data.
     // force FULL output materialization: count() lets Catalyst prune every
     // unreferenced projection, so map-heavy queries would be timed as little
     // more than a scan; the noop sink evaluates every output column

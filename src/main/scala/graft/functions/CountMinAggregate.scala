@@ -134,7 +134,7 @@ case class CmsSketchAgg(
     else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = BinaryType
-  override protected def codec: SketchCodec[CmsSketch] = SketchFamily.cms
+  override def codec: SketchCodec[CmsSketch] = SketchFamily.cms
   override def createAggregationBuffer(): CmsSketch = new CmsSketch(depth, width)
   override protected def add(buffer: CmsSketch, v: Any): Unit =
     buffer.add(v.asInstanceOf[UTF8String].toString)

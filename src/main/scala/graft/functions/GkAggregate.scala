@@ -112,7 +112,7 @@ case class GkSketchAgg(
     else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = BinaryType
-  override protected def codec: SketchCodec[GkBuffer] = SketchFamily.gk
+  override def codec: SketchCodec[GkBuffer] = SketchFamily.gk
   override def createAggregationBuffer(): GkBuffer = new GkBuffer(relativeError)
   override protected def add(buffer: GkBuffer, v: Any): Unit = buffer.add(v.asInstanceOf[Double])
   override def eval(buffer: GkBuffer): Any = buffer.serialize()

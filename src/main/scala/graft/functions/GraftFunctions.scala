@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.graftshim.GraftShims
@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
   * DataFrame: `import graft.functions.GraftFunctions._` then
   * `df.agg(hll_cardinality($"user_id", 4096))`.
   *
-  * SQL: `GraftFunctions.registerAll(spark)` once per session, then
-  * `SELECT hll_cardinality(user_id, 4096) FROM events`.
+  * SQL: `SELECT hll_cardinality(user_id, 4096) FROM events` on any session
+  * built with the engine on its classpath (`graft.plans.GraftExtensions`
+  * registers [[sqlFunctions]] at session build).
   *
   * Every aggregate casts its input to string first, replicating the
   * reference's `str(element)` coercion before hashing
@@ -310,10 +311,8 @@ object GraftFunctions {
     (k, bits)
   }
 
-  /** Every graft SQL function as (name, builder) — the single source both
-    * [[registerAll]] (plain sessions, as the driver harness builds) and
-    * `graft.plans.GraftExtensions` (the `spark.sql.extensions` deployment
-    * path) register from, so the two surfaces can never drift.
+  /** Every graft SQL function as (name, builder), which
+    * `graft.plans.GraftExtensions` injects into every session.
     */
   val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "hll_cardinality" -> { (args: Seq[Expression]) =>
@@ -478,10 +477,4 @@ object GraftFunctions {
         else (args, math.min(16, 63 / math.max(1, args.length)))
       InterleaveBits(ranks.map(Cast(_, LongType)), bits)
     })
-
-  /** Register all functions in the session's FunctionRegistry (idempotent). */
-  def registerAll(spark: SparkSession): Unit =
-    sqlFunctions.foreach { case (name, builder) =>
-      GraftShims.registerFunction(spark, name, builder)
-    }
 }

@@ -43,7 +43,7 @@ abstract class HllBuildAgg extends SketchBuildAgg[HllSketch] {
     */
   def hashName: String
 
-  override protected def codec: SketchCodec[HllSketch] = SketchFamily.hll
+  override def codec: SketchCodec[HllSketch] = SketchFamily.hll
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType != StringType) TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a STRING input (wrappers cast automatically), got ${child.dataType.sql}")
@@ -190,12 +190,10 @@ case class HllEstimate(child: Expression)
   * reference's `+` operator, HLL/HyperLogLog.py:171-179).
   */
 case class HllUnion(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
+  extends BinaryExpression with CodegenFallback with BinarySketchPair {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two BINARY sketch inputs, got ${left.dataType.sql}, ${right.dataType.sql}")
+  override protected def pairMismatch: String =
+    s"$prettyName requires two BINARY sketch inputs, got ${left.dataType.sql}, ${right.dataType.sql}"
   override def dataType: DataType = BinaryType
 
   override def nullSafeEval(a: Any, b: Any): Any = {

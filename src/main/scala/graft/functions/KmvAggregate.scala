@@ -51,6 +51,11 @@ final class KmvSketch(val k: Int) extends Serializable {
 
   def occupied: Int = values.size
 
+  /** Heap bytes of the retained hashes: a tree entry and a boxed long,
+    * 56 bytes each with compressed pointers.
+    */
+  def footprint: Long = 56L * values.size
+
   /** Unsigned long -> double in [0, 2^64). */
   @inline private def ud(h: Long): Double =
     if (h >= 0) h.toDouble else h.toDouble + 1.8446744073709552E19
@@ -233,7 +238,7 @@ case class KmvSketchAgg(
     else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = BinaryType
-  override protected def codec: SketchCodec[KmvSketch] = SketchFamily.kmv
+  override def codec: SketchCodec[KmvSketch] = SketchFamily.kmv
   override def createAggregationBuffer(): KmvSketch = new KmvSketch(k)
   override protected def add(buffer: KmvSketch, v: Any): Unit =
     buffer.addHash(KmvSketch.hash64(v.asInstanceOf[UTF8String]))
@@ -273,13 +278,7 @@ case class KmvEstimate(child: Expression)
 
 /** `kmv_jaccard(a, b)` -> DOUBLE Jaccard similarity estimate. */
 case class KmvJaccard(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType != BinaryType || right.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (BINARY, BINARY) sketches, got (${left.dataType.sql}, ${right.dataType.sql})")
-    else TypeCheckResult.TypeCheckSuccess
+  extends BinaryExpression with CodegenFallback with BinarySketchPair {
 
   override def dataType: DataType = DoubleType
 
@@ -293,13 +292,7 @@ case class KmvJaccard(left: Expression, right: Expression)
 
 /** `kmv_intersect_estimate(a, b)` -> DOUBLE |A ∩ B| estimate. */
 case class KmvIntersectEstimate(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType != BinaryType || right.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (BINARY, BINARY) sketches, got (${left.dataType.sql}, ${right.dataType.sql})")
-    else TypeCheckResult.TypeCheckSuccess
+  extends BinaryExpression with CodegenFallback with BinarySketchPair {
 
   override def dataType: DataType = DoubleType
 
@@ -450,13 +443,7 @@ case class KmvImport(child: Expression)
 
 /** `kmv_difference_estimate(a, b)` -> DOUBLE |A \ B| estimate (a-not-b). */
 case class KmvDifferenceEstimate(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType != BinaryType || right.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (BINARY, BINARY) sketches, got (${left.dataType.sql}, ${right.dataType.sql})")
-    else TypeCheckResult.TypeCheckSuccess
+  extends BinaryExpression with CodegenFallback with BinarySketchPair {
 
   override def dataType: DataType = DoubleType
 

@@ -30,6 +30,18 @@ trait SketchCodec[S <: AnyRef] extends Serializable {
     if (a == null) b else if (b == null) a else merge(a, b)
 }
 
+/** A codec whose [[merge]] writes the same bytes whatever order the
+  * buffers meet in, so a partial aggregate may emit one key several times
+  * and the final merge still agrees with a single-pass build. Such a
+  * family can run in `graft.plans.SketchPartialAggregateExec`, which
+  * charges each buffer's [[footprint]] to Spark's execution memory and
+  * flushes its keys when memory is refused.
+  */
+trait OrderFreeCodec[S <: AnyRef] extends SketchCodec[S] {
+  /** Heap bytes the buffer holds, in O(1). */
+  def footprint(sketch: S): Long
+}
+
 /** A stored-sketch family: every rule about its BINARY values that
   * `*_union_agg` and the scalar readers share. WIRE.md, "Empty sketch and
   * union rules", tabulates each family's choices.
@@ -49,34 +61,39 @@ object SketchFamily {
   /** HLL has no empty-set value: a 0-byte input is rejected as truncated,
     * and an all-null group unions to NULL.
     */
-  object hll extends SketchFamily[HllSketch] {
+  object hll extends SketchFamily[HllSketch] with OrderFreeCodec[HllSketch] {
     val unionName = "hll_union_agg"
     override def emptyUnion: Array[Byte] = null
     override def unionInput = "a BINARY sketch input"
     def read(bytes: Array[Byte]): HllSketch = HllSketch.deserialize(bytes)
     def write(s: HllSketch): Array[Byte] = s.serialize()
     def merge(a: HllSketch, b: HllSketch): HllSketch = a.merge(b)
+    def footprint(s: HllSketch): Long = s.footprint
   }
 
   /** 0 bytes is the empty set, both in and out. */
-  object kmv extends SketchFamily[KmvSketch] {
+  object kmv extends SketchFamily[KmvSketch] with OrderFreeCodec[KmvSketch] {
     val unionName = "kmv_union_agg"
     def read(bytes: Array[Byte]): KmvSketch =
       if (bytes.isEmpty) null else KmvSketch.deserialize(bytes)
     def write(s: KmvSketch): Array[Byte] = s.serialize()
     def merge(a: KmvSketch, b: KmvSketch): KmvSketch = a.merge(b)
+    def footprint(s: KmvSketch): Long = s.footprint
   }
 
   /** 0 bytes is the empty set, both in and out. */
-  object cms extends SketchFamily[CmsSketch] {
+  object cms extends SketchFamily[CmsSketch] with OrderFreeCodec[CmsSketch] {
     val unionName = "cms_union_agg"
     def read(bytes: Array[Byte]): CmsSketch =
       if (bytes.isEmpty) null else CmsSketch.deserialize(bytes)
     def write(s: CmsSketch): Array[Byte] = s.serialize()
     def merge(a: CmsSketch, b: CmsSketch): CmsSketch = a.merge(b)
+    def footprint(s: CmsSketch): Long = 8L * s.counts.length
   }
 
-  /** Misra-Gries: 0 bytes is the empty set, both in and out. */
+  /** Misra-Gries: 0 bytes is the empty set, both in and out. Its byte
+    * wire follows hash-map order, so merge order shows in the bytes.
+    */
   object topk extends SketchFamily[TopKSketch] {
     val unionName = "topk_union_agg"
     def read(bytes: Array[Byte]): TopKSketch =
@@ -115,6 +132,19 @@ trait BinarySketchInput extends Expression {
       s"$prettyName requires $sketchInput, got ${child.dataType.sql}")
 }
 
+/** Type check of an expression that reads two stored sketches. */
+trait BinarySketchPair extends Expression {
+  def left: Expression
+  def right: Expression
+  /** The type-check failure message. */
+  protected def pairMismatch: String =
+    s"$prettyName requires (BINARY, BINARY) sketches, got " +
+      s"(${left.dataType.sql}, ${right.dataType.sql})"
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (left.dataType == BinaryType && right.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(pairMismatch)
+}
+
 /** A sketch-building aggregate: folds each non-null input row into an `S`
   * buffer; the codec moves and merges the buffers between partial and
   * final aggregation, which is how the reference's
@@ -129,7 +159,7 @@ trait BinarySketchInput extends Expression {
   */
 abstract class SketchBuildAgg[S <: AnyRef] extends TypedImperativeAggregate[S]
     with UnaryLike[Expression] {
-  protected def codec: SketchCodec[S]
+  def codec: SketchCodec[S]
   /** Folds one non-null input value into the buffer. */
   protected def add(buffer: S, value: Any): Unit
 

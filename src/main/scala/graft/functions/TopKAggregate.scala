@@ -157,7 +157,7 @@ case class ApproxTopK(
     StructField("item", StringType, nullable = false),
     StructField("count", LongType, nullable = false))), containsNull = false)
 
-  override protected def codec: SketchCodec[TopKSketch] = SketchFamily.topk
+  override def codec: SketchCodec[TopKSketch] = SketchFamily.topk
   override def createAggregationBuffer(): TopKSketch = new TopKSketch(capacity)
   override protected def add(buffer: TopKSketch, v: Any): Unit =
     buffer.add(v.asInstanceOf[UTF8String].toString)
@@ -196,7 +196,7 @@ case class TopKSketchAgg(
     else TypeCheckResult.TypeCheckSuccess
 
   override def dataType: DataType = BinaryType
-  override protected def codec: SketchCodec[TopKSketch] = SketchFamily.topk
+  override def codec: SketchCodec[TopKSketch] = SketchFamily.topk
   override def createAggregationBuffer(): TopKSketch = new TopKSketch(capacity)
   override protected def add(buffer: TopKSketch, v: Any): Unit =
     buffer.add(v.asInstanceOf[UTF8String].toString)

@@ -31,8 +31,8 @@ final class VecMinMax extends Serializable {
       // silently corrupt the calibration — same policy as ragged input
       require(!v.isNullAt(i), s"vec_minmax_agg: null element at dimension $i")
       val x = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-      if (x < mins(i)) mins(i) = x
-      if (x > maxs(i)) maxs(i) = x
+      if (VecMinMax.below(x, mins(i))) mins(i) = x
+      if (VecMinMax.below(maxs(i), x)) maxs(i) = x
       i += 1
     }
   }
@@ -44,8 +44,8 @@ final class VecMinMax extends Serializable {
       s"vec_minmax_agg: ragged merge — ${o.mins.length} dims vs ${mins.length}")
     var i = 0
     while (i < mins.length) {
-      if (o.mins(i) < mins(i)) mins(i) = o.mins(i)
-      if (o.maxs(i) > maxs(i)) maxs(i) = o.maxs(i)
+      if (VecMinMax.below(o.mins(i), mins(i))) mins(i) = o.mins(i)
+      if (VecMinMax.below(maxs(i), o.maxs(i))) maxs(i) = o.maxs(i)
       i += 1
     }
     this
@@ -61,9 +61,16 @@ final class VecMinMax extends Serializable {
   }
 }
 
-object VecMinMax extends SketchCodec[VecMinMax] {
+object VecMinMax extends OrderFreeCodec[VecMinMax] {
+  /** a < b, with -0.0 below 0.0 so that neither zero wins by arriving
+    * first; NaN is never below or above anything, so it never enters.
+    */
+  @inline def below(a: Double, b: Double): Boolean =
+    a < b || (a == b && java.lang.Double.compare(a, b) < 0)
+
   def write(s: VecMinMax): Array[Byte] = s.serialize()
   def merge(a: VecMinMax, b: VecMinMax): VecMinMax = a.merge(b)
+  def footprint(s: VecMinMax): Long = if (s.mins == null) 0L else 16L * s.mins.length
   def read(bytes: Array[Byte]): VecMinMax = {
     val bb = java.nio.ByteBuffer.wrap(bytes)
     val n = bb.getInt
@@ -106,7 +113,7 @@ case class VecMinMaxAgg(
       StructField("mn", DoubleType, nullable = false),
       StructField("mx", DoubleType, nullable = false))), containsNull = false)
 
-  override protected def codec: SketchCodec[VecMinMax] = VecMinMax
+  override def codec: SketchCodec[VecMinMax] = VecMinMax
   override def createAggregationBuffer(): VecMinMax = new VecMinMax
   override protected def add(buffer: VecMinMax, v: Any): Unit =
     buffer.update(v.asInstanceOf[ArrayData], isFloat)

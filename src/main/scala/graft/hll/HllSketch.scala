@@ -59,6 +59,11 @@ final class HllSketch private (
   /** Dense register array (densifies a sparse sketch on first access). */
   def registers: Array[Byte] = { densify(); dense }
 
+  /** Heap bytes of the registers: m dense, 5 per slot (key and value)
+    * sparse.
+    */
+  def footprint: Long = if (dense != null) m else 5L * skeys.length
+
   private def sparseLimit: Int = m >>> 4 // densify at 1/16 occupancy
 
   private def densify(): Unit = {

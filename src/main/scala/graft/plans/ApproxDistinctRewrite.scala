@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.functions.HllCardinality
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.expressions.{Cast, ConcatWs, Expression, If, IsNull, Literal, Or}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
@@ -61,14 +61,18 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
   }
 }
 
-/** SparkSessionExtensions entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. Injects the rewrite
-  * rule and registers every graft SQL function on session build.
+/** The engine's session extensions: every graft SQL function, the opt-in
+  * COUNT(DISTINCT) rewrite, and the flushing partial aggregate for grouped
+  * sketch builds ([[SketchPartialAggregation]]). Registered as a
+  * `SparkSessionExtensionsProvider` in `META-INF/services`, so every
+  * session built with the engine on its classpath loads it; it also works
+  * as `spark.sql.extensions=graft.plans.GraftExtensions` or through
+  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => ApproxDistinctRewrite)
+    e.injectPlannerStrategy(_ => SketchPartialAggregation)
     graft.functions.GraftFunctions.sqlFunctions.foreach { case (name, builder) =>
       e.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),
@@ -79,9 +83,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Attach the rule to an EXISTING session (the driver harness builds
-    * plain sessions): idempotently append to the session's adaptive/
-    * experimental extra optimizations.
+  /** Attach the rule to a session whose builder did not load the
+    * extensions: idempotently append it to the session's experimental
+    * extra optimizations.
     */
   def install(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraOptimizations

@@ -1,33 +1,21 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.TaskContext
+import org.apache.spark.memory.TaskMemoryManager
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge to `private[sql]` Spark internals (lives under org.apache.spark.sql
-  * for access; no Spark code modified). Gives the engine:
-  *  - Column <-> Catalyst Expression conversion, so custom
-  *    TypedImperativeAggregate / Expression nodes are usable from the public
-  *    DataFrame API;
-  *  - FunctionRegistry registration, so the same nodes resolve from SQL text
-  *    on any session (no SparkSessionExtensions requirement — the driver
-  *    harness builds plain sessions).
+  * for access; no Spark code modified): Column <-> Catalyst Expression
+  * conversion, so custom TypedImperativeAggregate / Expression nodes are
+  * usable from the public DataFrame API, and the task's memory manager,
+  * which a physical node needs to charge execution memory.
   */
 object GraftShims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  def registerFunction(
-      spark: SparkSession,
-      name: String,
-      builder: Seq[Expression] => Expression): Unit = {
-    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    val ident = FunctionIdentifier(name)
-    val info = new ExpressionInfo("graft", name)
-    registry.registerFunction(ident, info, builder)
-  }
+  def taskMemoryManager(ctx: TaskContext): TaskMemoryManager = ctx.taskMemoryManager()
 }

@@ -69,7 +69,6 @@ class HllWireSpec extends AnyFunSuite {
 
   test("wire struct survives as exploded relational rows and re-assembles in SQL") {
     import spark.implicits._
-    GraftFunctions.registerAll(spark)
     val df = (0 until 5000).map(i => (s"g${i % 3}", s"u${i % 700}"))
       .toDF("g", "u")
     df.createOrReplaceTempView("wire_src")

@@ -66,7 +66,6 @@ class KmvWireSpec extends AnyFunSuite {
 
   test("wire contents equal the bottom-k of the xxhash64 builtin, in SQL") {
     import spark.implicits._
-    GraftFunctions.registerAll(spark)
     val df = (0 until 5000).map(i => (s"g${i % 3}", s"u${i % 700}"))
       .toDF("g", "u")
     df.createOrReplaceTempView("kmv_wire_src")

@@ -100,9 +100,17 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("hll aggregate plans as partial/final around one exchange") {
     val p = plan("hll_parts_by_returnflag")
-    val objAggs = "ObjectHashAggregate".r.findAllIn(p).length
-    assert(objAggs >= 2, s"expected partial+final ObjectHashAggregate:\n$p")
-    assert(p.contains("hll_cardinality"), "custom aggregate missing from plan")
+    // grouped: the flushing sketch partial, one exchange on the key, then
+    // Spark's final ObjectHashAggregate, as three consecutive plan lines
+    val lines = p.linesIterator.toIndexedSeq
+    val partials = lines.indices.filter(i => lines(i).contains("SketchPartialAggregate"))
+    assert(partials.size == 1, s"expected one SketchPartialAggregate:\n$p")
+    val i = partials.head
+    assert(lines(i).contains("partial_hll_cardinality"), s"custom aggregate missing from plan:\n$p")
+    assert(i >= 2 && lines(i - 1).contains("Exchange hashpartitioning(l_returnflag") &&
+      lines(i - 2).contains("ObjectHashAggregate") && lines(i - 2).contains("hll_cardinality"),
+      s"expected final ObjectHashAggregate <- Exchange <- SketchPartialAggregate:\n$p")
+    assert("ObjectHashAggregate".r.findAllIn(p).length == 1, s"expected one ObjectHashAggregate:\n$p")
     // scan must prune to the two columns used
     assert(!p.contains("l_extendedprice"), "column pruning lost on lineitem")
   }

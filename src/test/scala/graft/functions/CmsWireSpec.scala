@@ -89,7 +89,6 @@ class CmsWireSpec extends AnyFunSuite {
   }
 
   test("SQL surface: cms_export/cms_import/cms_positions registered") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val r = (0 until 500).map(i => s"t${i % 9}").toDF("v").createOrReplaceTempView("cms_in")
     val got = spark.sql(

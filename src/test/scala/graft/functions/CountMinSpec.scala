@@ -61,7 +61,6 @@ class CountMinSpec extends AnyFunSuite {
   }
 
   test("SQL registration: cms_sketch_agg + cms_query through spark.sql") {
-    GraftFunctions.registerAll(spark)
     freqData.createOrReplaceTempView("cms_in")
     val n = spark.sql(
       """SELECT cms_query(sk, 'item_0') FROM

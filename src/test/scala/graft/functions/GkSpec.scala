@@ -54,7 +54,6 @@ class GkSpec extends AnyFunSuite {
   }
 
   test("SQL registration: gk family through spark.sql") {
-    GraftFunctions.registerAll(spark)
     data.createOrReplaceTempView("gk_in")
     val p50 = spark.sql(
       """SELECT gk_quantile(gk_union_agg(gk), 0.5) FROM

@@ -3,6 +3,7 @@ package graft.functions
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShims
 import org.scalatest.funsuite.AnyFunSuite
 import scala.io.Source
 
@@ -105,7 +106,6 @@ class HllAggregatesSpec extends AnyFunSuite {
 
   test("SQL registration: same results through spark.sql") {
     import spark.implicits._
-    GraftFunctions.registerAll(spark)
     spark.createDataset(dataTokens.toSeq).toDF("v").createOrReplaceTempView("hll_sql_t")
     val est = spark.sql("SELECT hll_cardinality(v, 4096) AS est FROM hll_sql_t")
       .collect()(0).getDouble(0)
@@ -223,13 +223,13 @@ class HllAggregatesSpec extends AnyFunSuite {
 
   test("Spark's own hll_sketch_agg binary fails graft's estimate and union by name") {
     // hll_sketch_agg, hll_union_agg and hll_union are also Spark built-ins
-    // (DataSketches HLL): on a session without registerAll the SQL names
-    // resolve to Spark's functions, and the sketch they build is a
-    // different binary, which graft's Column functions must refuse
-    val plain = spark.newSession()
-    val builtin = plain.catalog.getFunction("hll_sketch_agg").className
-    assert(builtin.startsWith("org.apache.spark."), builtin)
-    val sk = plain.sql("SELECT hll_sketch_agg(id) AS sk FROM range(1000)")
+    // (DataSketches HLL). Every session resolves the SQL names to graft, so
+    // Spark's binary comes from its own expression class; it is a different
+    // format, which graft's Column functions must refuse
+    assert(spark.catalog.getFunction("hll_sketch_agg").className == "graft")
+    val sk = spark.range(1000).agg(GraftShims.column(
+      new org.apache.spark.sql.catalyst.expressions.aggregate.HllSketchAgg(
+        GraftShims.expression(col("id"))).toAggregateExpression()).as("sk"))
     for ((name, use) <- Seq[(String, Column => Column)](
         "hll_estimate" -> (c => GraftFunctions.hll_estimate(c)),
         "hll_union_agg" ->

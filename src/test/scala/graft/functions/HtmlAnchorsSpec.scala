@@ -60,7 +60,6 @@ class HtmlAnchorsSpec extends AnyFunSuite {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     try {
-      GraftFunctions.registerAll(spark)
       val row = spark.sql(
         """SELECT html_anchors('<a href="a.html">lbl</a>', 'http://h.invalid/d/') AS a,
           |       html_blocks('<p><a href="/x">m</a> text</p>') AS b""".stripMargin).head()

@@ -150,7 +150,6 @@ class HtmlOutlinksSpec extends AnyFunSuite {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     try {
-      GraftFunctions.registerAll(spark)
       val row = spark.sql(
         """SELECT html_outlinks('<a href="a.html">x</a>', 'http://h.invalid/d/') AS links,
           |       url_resolve('http://a/b/c/d;p?q', '../g') AS r""".stripMargin).head()

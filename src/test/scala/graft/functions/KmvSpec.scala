@@ -166,7 +166,6 @@ class KmvSpec extends AnyFunSuite {
 
   test("dataframe + SQL surface: build, store, re-aggregate, estimate") {
     import spark.implicits._
-    GraftFunctions.registerAll(spark)
     val df = (0 until 3000).map(i => (i % 10, s"u${i % 1300}")).toDF("g", "v")
     df.createOrReplaceTempView("kmv_in")
     // per-group sketches stored, then re-merged: same answer as one global
@@ -182,7 +181,6 @@ class KmvSpec extends AnyFunSuite {
 
   test("set ops against an all-null-group (0-byte) sketch read as the empty set") {
     import spark.implicits._
-    GraftFunctions.registerAll(spark)
     val real = (0 until 100).map(i => s"v$i").toDF("v")
       .agg(kmv_sketch_agg(col("v"), 64).as("sk"))
     // one group with a real sketch, one whose kmv_union_agg saw only nulls
@@ -198,7 +196,6 @@ class KmvSpec extends AnyFunSuite {
 
   test("stored union-agg outputs re-aggregate, including 0-byte empty-group values") {
     import spark.implicits._
-    GraftFunctions.registerAll(spark)
     // a real per-group sketch plus the 0-byte output kmv_union_agg emits
     // for an all-null group — both must flow through a SECOND union_agg
     val real = (0 until 50).map(i => (1, s"s$i")).toDF("g", "v")
@@ -215,7 +212,6 @@ class KmvSpec extends AnyFunSuite {
 
   test("union_agg over an empty/all-null group estimates 0") {
     import spark.implicits._
-    GraftFunctions.registerAll(spark)
     Seq((1, null: Array[Byte])).toDF("g", "sk").createOrReplaceTempView("kmv_null")
     val est = spark.sql(
       "SELECT kmv_estimate(kmv_union_agg(sk)) FROM kmv_null GROUP BY g")

@@ -78,7 +78,6 @@ class RepetitionSpec extends AnyFunSuite {
     assert(r(1L)._2 < r(2L)._2, "template doc must score lower distinct ratio")
     assert(r(3L) == ((0, 1.0)), "empty text convention")
     // SQL registration round-trip
-    GraftFunctions.registerAll(spark)
     docs.createOrReplaceTempView("rep_docs")
     val viaSql = spark.sql(
       "SELECT repeated_span_stats(text).longest_rep_len FROM rep_docs WHERE doc_id = 1")

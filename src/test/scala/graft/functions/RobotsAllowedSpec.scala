@@ -21,7 +21,6 @@ class RobotsAllowedSpec extends AnyFunSuite {
       "Disallow: /*.tmp$\n\nUser-agent: *\nDisallow: /\n"
 
   test("SQL surface agrees with the plain evaluator over generated paths") {
-    graft.functions.GraftFunctions.registerAll(spark)
     import spark.implicits._
     val paths = (0L until 200L).map { i =>
       i % 5 match {
@@ -49,7 +48,6 @@ class RobotsAllowedSpec extends AnyFunSuite {
   }
 
   test("expression codegens via the static-call pattern") {
-    graft.functions.GraftFunctions.registerAll(spark)
     import org.apache.spark.sql.execution.debug._
     // range() always whole-stage-codegens, unlike a LocalTableScan toy plan
     val gen = codegenString(spark.sql(
@@ -61,7 +59,6 @@ class RobotsAllowedSpec extends AnyFunSuite {
   }
 
   test("url_normalize codegens too (same static-call pattern)") {
-    graft.functions.GraftFunctions.registerAll(spark)
     import org.apache.spark.sql.execution.debug._
     val gen = codegenString(spark.sql(
       "SELECT url_normalize(CONCAT('HTTP://H', CAST(id AS STRING), " +

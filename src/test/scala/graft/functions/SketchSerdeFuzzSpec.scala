@@ -71,7 +71,6 @@ class SketchSerdeFuzzSpec extends AnyFunSuite {
   test("cms_import: width bomb and Int-overflow products rejected (SQL surface)") {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-    GraftFunctions.registerAll(spark)
     def imp(depth: Int, width: Int): Unit =
       spark.sql(
         s"""SELECT cms_import(named_struct('depth', $depth, 'width', $width,

@@ -42,7 +42,6 @@ class TopKSpec extends AnyFunSuite {
 
   test("SQL surface and sketch merge across groups") {
     import spark.implicits._
-    GraftFunctions.registerAll(spark)
     val df = (0 until 1000).map(i => (s"g${i % 2}", s"w${i % 7}")).toDF("g", "v")
     df.createOrReplaceTempView("tk_t")
     val viaSql = spark.sql(

@@ -100,7 +100,6 @@ class VecQuantSpec extends AnyFunSuite {
   }
 
   test("SQL surface round-trips and 4x-compresses") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     vecs(100, 32, 3L).toDF("id", "v").createOrReplaceTempView("vq_in")
     val r = spark.sql(

@@ -31,7 +31,6 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("interleave_bits is SQL-registered: z-key from plain SQL, bits rule works") {
-    graft.functions.GraftFunctions.registerAll(spark)
     val r = spark.sql(
       """SELECT interleave_bits(3, 1) AS z2,
         |       interleave_bits(3L, 1L, 2) AS z2b,

@@ -79,7 +79,6 @@ class RendezvousSpec extends AnyFunSuite {
 
   test("fast variant: SQL surface (hrw_shard) agrees with the DataFrame API") {
     import spark.implicits._
-    graft.functions.GraftFunctions.registerAll(spark)
     (0L until 500L).toDF("k").createOrReplaceTempView("_hrw_keys")
     val viaSql = spark.sql("SELECT k, hrw_shard(k, 8) AS s FROM _hrw_keys")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
