@@ -25,16 +25,6 @@ object SparkEntry {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Windows over the whole of a small frame that sits in one partition
-    * (after `repartition(1)` or a top-k) are keyed by `_part`, the
-    * `spark_partition_id()` this adds, which is 0 on every row there: no
-    * exchange is added, and windows on the same key still collapse into
-    * one. A window with no key plans the same single-partition exchange,
-    * but WindowExec then warns "No Partition Defined" on every planning
-    * pass, and the optimizer drops a literal key (EliminateWindowPartitions).
-    */
-  private def withPart(df: DataFrame): DataFrame = df.withColumn("_part", spark_partition_id())
-  private def wholeFrame = org.apache.spark.sql.expressions.Window.partitionBy(col("_part"))
 
   /** `events.ts` has shipped in two encodings across testdata generations:
     * parquet `timestamp[us]` (current — reads directly as a Spark timestamp)
@@ -938,12 +928,16 @@ object SparkEntry {
     // (partial-agg collapsed before the single exchange), then one lag
     // window over the ~80-row month series.
     "q_mom_growth" -> ((s, dir) => {
+      import org.apache.spark.sql.expressions.Window
       val o = t(s, dir, "orders")
       val monthly = o.groupBy(
           date_format(col("o_orderdate"), "yyyy-MM").as("month"))
         .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      withPart(monthly.repartition(1))
-        .withColumn("_prev", lag(col("cents"), 1).over(wholeFrame.orderBy(col("month"))))
+      // keyless window: WindowExec warns "No Partition Defined", which is
+      // harmless over the ~80 months (a literal key is dropped by the
+      // optimizer, so it cannot silence the warning)
+      monthly
+        .withColumn("_prev", lag(col("cents"), 1).over(Window.orderBy(col("month"))))
         .select(col("month"), col("cents"),
           coalesce(
             round((col("cents") - col("_prev")).cast("double") / col("_prev"), 4),
@@ -1958,9 +1952,11 @@ object SparkEntry {
       // regime, clear of the reference's documented mid-range bias zone
       val sk = toks.groupBy(col("bucket"))
         .agg(GraftFunctions.hll_sketch_agg(col("tok"), 1 << 16).as("_sk"))
-      val wCum = wholeFrame.orderBy(col("bucket"))
+      // keyless window over one row per bucket: WindowExec's "No
+      // Partition Defined" warning is harmless here
+      val wCum = Window.orderBy(col("bucket"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      withPart(newPer.join(sk, Seq("bucket")).repartition(1))
+      newPer.join(sk, Seq("bucket"))
         .withColumn("cum_vocab", sum(col("n_new_tokens")).over(wCum))
         .withColumn("_cum_est",
           GraftFunctions.hll_estimate(GraftFunctions.hll_union_agg(col("_sk")).over(wCum)))
@@ -3315,14 +3311,17 @@ object SparkEntry {
     // deterministic, re-derivable in SQL. TakeOrdered does the selection
     // (no global sort); the row_number runs over the 20 survivors only.
     "q_weighted_sample" -> ((s, dir) => {
+      import org.apache.spark.sql.expressions.Window
       val d = t(s, dir, "documents")
       val u = (pmod(col("doc_id") * 2654435761L, lit(1000000007L)) + 1)
         .cast("double") / 1000000008.0
       val pr = log(u) / col("n_chars")
       val top = d.select(col("doc_id"), col("n_chars"), pr.as("_pr"))
         .orderBy(col("_pr").desc, col("doc_id")).limit(20)
-      withPart(top).withColumn("rn",
-          row_number().over(wholeFrame.orderBy(col("_pr").desc, col("doc_id"))))
+      // keyless window over the 20 survivors: WindowExec's "No Partition
+      // Defined" warning is harmless here
+      top.withColumn("rn",
+          row_number().over(Window.orderBy(col("_pr").desc, col("doc_id"))))
         .select(col("rn"), col("doc_id"), col("n_chars"))
         .orderBy(col("rn"))
     }),

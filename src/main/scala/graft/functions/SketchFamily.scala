@@ -33,9 +33,9 @@ trait SketchCodec[S <: AnyRef] extends Serializable {
 /** A codec whose [[merge]] writes the same bytes whatever order the
   * buffers meet in, so a partial aggregate may emit one key several times
   * and the final merge still agrees with a single-pass build. Such a
-  * family can run in `graft.plans.SketchPartialAggregateExec`, which
-  * charges each buffer's [[footprint]] to Spark's execution memory and
-  * flushes its keys when memory is refused.
+  * family can run in `graft.plans.SketchPartialAggregateExec` and
+  * `graft.plans.SketchFinalAggregateExec`, which charge each buffer's
+  * [[footprint]] to Spark's execution memory.
   */
 trait OrderFreeCodec[S <: AnyRef] extends SketchCodec[S] {
   /** Heap bytes the buffer holds, in O(1). */

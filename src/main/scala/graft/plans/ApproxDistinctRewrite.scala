@@ -62,8 +62,8 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
 }
 
 /** The engine's session extensions: every graft SQL function, the opt-in
-  * COUNT(DISTINCT) rewrite, and the flushing partial aggregate for grouped
-  * sketch builds ([[SketchPartialAggregation]]). Registered as a
+  * COUNT(DISTINCT) rewrite, and the hash aggregates for grouped sketch
+  * builds ([[SketchAggregation]]). Registered as a
   * `SparkSessionExtensionsProvider` in `META-INF/services`, so every
   * session built with the engine on its classpath loads it; it also works
   * as `spark.sql.extensions=graft.plans.GraftExtensions` or through
@@ -72,7 +72,7 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
 class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => ApproxDistinctRewrite)
-    e.injectPlannerStrategy(_ => SketchPartialAggregation)
+    e.injectPlannerStrategy(_ => SketchAggregation)
     graft.functions.GraftFunctions.sqlFunctions.foreach { case (name, builder) =>
       e.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),

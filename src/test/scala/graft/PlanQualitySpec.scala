@@ -101,16 +101,17 @@ class PlanQualitySpec extends AnyFunSuite {
   test("hll aggregate plans as partial/final around one exchange") {
     val p = plan("hll_parts_by_returnflag")
     // grouped: the flushing sketch partial, one exchange on the key, then
-    // Spark's final ObjectHashAggregate, as three consecutive plan lines
+    // the sketch final, as three consecutive plan lines
     val lines = p.linesIterator.toIndexedSeq
     val partials = lines.indices.filter(i => lines(i).contains("SketchPartialAggregate"))
     assert(partials.size == 1, s"expected one SketchPartialAggregate:\n$p")
     val i = partials.head
     assert(lines(i).contains("partial_hll_cardinality"), s"custom aggregate missing from plan:\n$p")
     assert(i >= 2 && lines(i - 1).contains("Exchange hashpartitioning(l_returnflag") &&
-      lines(i - 2).contains("ObjectHashAggregate") && lines(i - 2).contains("hll_cardinality"),
-      s"expected final ObjectHashAggregate <- Exchange <- SketchPartialAggregate:\n$p")
-    assert("ObjectHashAggregate".r.findAllIn(p).length == 1, s"expected one ObjectHashAggregate:\n$p")
+      lines(i - 2).contains("SketchFinalAggregate") && lines(i - 2).contains("hll_cardinality"),
+      s"expected SketchFinalAggregate <- Exchange <- SketchPartialAggregate:\n$p")
+    assert("SketchFinalAggregate".r.findAllIn(p).length == 1, s"expected one SketchFinalAggregate:\n$p")
+    assert(!p.contains("ObjectHashAggregate"), s"expected no ObjectHashAggregate:\n$p")
     // scan must prune to the two columns used
     assert(!p.contains("l_extendedprice"), "column pruning lost on lineitem")
   }

@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions.{array, col, concat, count, lit, when}
 import org.apache.spark.sql.graftshim.GraftShims
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Grouped sketch builds and unions run their partial aggregation in
-  * [[SketchPartialAggregateExec]], and what they produce equals sketches
-  * built on the driver, with and without flushes.
+/** Grouped sketch builds and unions run in [[SketchPartialAggregateExec]]
+  * and [[SketchFinalAggregateExec]], and what they produce equals sketches
+  * built on the driver, with and without flushes and hand-overs.
   */
-class SketchPartialAggregateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+class SketchAggregateSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
@@ -27,6 +27,7 @@ class SketchPartialAggregateSpec extends AnyFunSuite with AdaptiveSparkPlanHelpe
   private def assertAllEqual(results: Seq[SketchPartialChecks.Result]): Unit =
     results.foreach { r =>
       assert(r.partials >= 1, s"${r.name}: no SketchPartialAggregate ran")
+      assert(r.finals >= 1, s"${r.name}: no SketchFinalAggregate ran")
       assert(r.groups == r.want, s"${r.name}: ${r.groups} groups, want ${r.want}")
       assert(r.mismatched == 0, s"${r.name}: ${r.mismatched} groups differ from the driver's")
     }
@@ -35,17 +36,24 @@ class SketchPartialAggregateSpec extends AnyFunSuite with AdaptiveSparkPlanHelpe
     assertAllEqual(SketchPartialChecks.run(spark))
   }
 
-  test("under a small execution memory the partial flushes and the results still equal") {
-    val c = ChildJvm.run("graft.plans.SketchPartialChild")
+  test("under a small execution memory the partial flushes, the final hands over, results equal") {
+    val c = ChildJvm.run("graft.plans.SketchAggregateChild")
     assert(c.exit == 0, s"child JVM failed:\n${c.out}")
-    val results = c.out.linesIterator.filter(_.startsWith("SPA ")).map(l =>
-      SketchPartialChecks.Result.parse(l.drop(4))).toSeq
-    assert(results.map(_.name) == SketchPartialChecks.Names, c.out)
-    assertAllEqual(results)
-    results.foreach(r => assert(r.flushes > 0, s"${r.name}: the partial never flushed:\n${c.out}"))
+    // 4 shuffle partitions write through BypassMergeSortShuffleWriter, 201
+    // through UnsafeShuffleWriter, whose sorter asks the task for memory
+    // while the partial hands out its keys
+    for (parts <- SketchAggregateChild.Partitions) {
+      val tag = s"SPA $parts "
+      val results = c.out.linesIterator.filter(_.startsWith(tag)).map(l =>
+        SketchPartialChecks.Result.parse(l.drop(tag.length))).toSeq
+      assert(results.map(_.name) == SketchPartialChecks.Names, c.out)
+      assertAllEqual(results)
+      results.foreach(r => assert(r.flushes > 0, s"${r.name}: the partial never flushed:\n${c.out}"))
+      results.foreach(r => assert(r.handedOver > 0, s"${r.name}: the final never handed over:\n${c.out}"))
+    }
   }
 
-  test("top-k, GK, global, filtered and mixed aggregates keep Spark's ObjectHashAggregate partial") {
+  test("top-k, GK, global, filtered and mixed aggregates keep Spark's ObjectHashAggregates") {
     import spark.implicits._
     val df = (0 until 1000).map(i => (i % 300, s"u$i", i.toDouble)).toDF("g", "v", "x")
     val keep = Seq(
@@ -61,27 +69,31 @@ class SketchPartialAggregateSpec extends AnyFunSuite with AdaptiveSparkPlanHelpe
       k.collect()
       val p = k.queryExecution.executedPlan
       assert(collect(p) { case s: SketchPartialAggregateExec => s }.isEmpty, s"$p")
+      assert(collect(p) { case s: SketchFinalAggregateExec => s }.isEmpty, s"$p")
       assert(collect(p) { case o: ObjectHashAggregateExec => o }.size == 2, s"$p")
     }
   }
 }
 
-/** The checks both the test JVM and [[SketchPartialChild]] run: each family
+/** The checks both the test JVM and [[SketchAggregateChild]] run: each family
   * grouped over 10,000 keys from 4 input partitions (every key in every
   * partition), compared group by group with sketches built on the driver
   * from the same rows.
   */
 object SketchPartialChecks {
   /** What one aggregate produced: groups out, groups expected, groups
-    * whose value differs from the driver's, partial nodes and flushes.
+    * whose value differs from the driver's, partial nodes and their
+    * flushes, final nodes and their tasks handed to Spark's aggregate.
     */
   final case class Result(name: String, groups: Int, want: Int, mismatched: Int,
-      partials: Int, flushes: Long) {
-    override def toString: String = s"$name $groups $want $mismatched $partials $flushes"
+      partials: Int, flushes: Long, finals: Int, handedOver: Long) {
+    override def toString: String =
+      s"$name $groups $want $mismatched $partials $flushes $finals $handedOver"
   }
   object Result {
     def parse(s: String): Result = s.split(" ") match {
-      case Array(n, g, w, m, p, f) => Result(n, g.toInt, w.toInt, m.toInt, p.toInt, f.toLong)
+      case Array(n, g, w, m, p, f, fi, h) =>
+        Result(n, g.toInt, w.toInt, m.toInt, p.toInt, f.toLong, fi.toInt, h.toLong)
     }
   }
 
@@ -163,11 +175,12 @@ object SketchPartialChecks {
       ("cms_union", stored.groupBy(col("c")).agg(cms_union_agg(col("cms"))), cms(coarse), bytes)
     ).map { case (name, q, want, value) =>
       val got = q.collect().map(r => r.getInt(0) -> value(r)).toMap
-      val nodes = AdaptiveSparkPlanHelperOf.collect(q.queryExecution.executedPlan) {
-        case s: SketchPartialAggregateExec => s
-      }
+      val plan = q.queryExecution.executedPlan
+      val partials = AdaptiveSparkPlanHelperOf.collect(plan) { case s: SketchPartialAggregateExec => s }
+      val finals = AdaptiveSparkPlanHelperOf.collect(plan) { case s: SketchFinalAggregateExec => s }
       Result(name, got.size, want.size, want.count { case (g, v) => !got.get(g).contains(v) },
-        nodes.size, nodes.map(_.metrics("numFlushes").value).sum)
+        partials.size, partials.map(_.metrics("numFlushes").value).sum,
+        finals.size, finals.map(_.metrics("numHandedOver").value).sum)
     }
   }
 
@@ -175,21 +188,27 @@ object SketchPartialChecks {
 }
 
 /** Child-JVM side of the flush test: a session whose execution memory is
-  * about 1 MB per task, so every partial aggregate of
-  * [[SketchPartialChecks]] is refused memory and flushes. Prints one
-  * `SPA <result>` line per aggregate.
+  * about 1.2 MB for its two task slots, so every partial aggregate of
+  * [[SketchPartialChecks]] is refused memory and flushes, and every final
+  * one hands its task to Spark's aggregate. Runs the checks at each of
+  * [[Partitions]] shuffle partitions and prints one
+  * `SPA <partitions> <result>` line per aggregate.
   */
-object SketchPartialChild {
+object SketchAggregateChild {
+  val Partitions = Seq(4, 201)
+
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
-      .config("spark.testing.memory", (4L << 20).toString)
+      .config("spark.testing.memory", (2L << 20).toString)
       .config("spark.testing.reservedMemory", "0")
       .config("spark.buffer.pageSize", "64k")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    try SketchPartialChecks.run(spark).foreach(r => println(s"SPA $r"))
-    finally spark.stop()
+    try Partitions.foreach { parts =>
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      SketchPartialChecks.run(spark).foreach(r => println(s"SPA $parts $r"))
+    } finally spark.stop()
   }
 }
